@@ -63,7 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dml import local_frame
 from .snowflake_sql import snowflake_sql
-from .sqldialect import _dml_key, _DML_HEAD_RE, _strip_line_comments, lower_select
+from .sqldialect import _dml_key, _DML_HEAD_RE, lower_select
+from .sqllex import balanced_end, split_statements, strip_line_comments, sub_in_code
 
 __all__ = [
     "SessionVariable",
@@ -121,43 +122,6 @@ def _render_literal(value) -> tuple[str, str]:
 _VAR_REF = re.compile(r"\$([A-Za-z_]\w*)")
 
 
-def _scan_outside_literals(sql: str):
-    """Yield (start, end, is_code) spans: is_code=False for '...'
-    string literals (with '' self-escape) and -- / block comments —
-    the regions ``$var`` substitution must never touch."""
-    i, n = 0, len(sql)
-    code_start = 0
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            yield code_start, i, True
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and sql[j + 1 : j + 2] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    break
-                else:
-                    j += 1
-            yield i, min(j + 1, n), False
-            i = code_start = min(j + 1, n)
-        elif c == "-" and sql[i + 1 : i + 2] == "-":
-            yield code_start, i, True
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            yield i, j, False
-            i = code_start = j
-        elif c == "/" and sql[i + 1 : i + 2] == "*":
-            yield code_start, i, True
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            yield i, j, False
-            i = code_start = j
-        else:
-            i += 1
-    yield code_start, n, True
-
-
 _IDENTIFIER_REF = re.compile(
     r"IDENTIFIER\s*\(\s*\$([A-Za-z_]\w*)\s*\)", re.IGNORECASE
 )
@@ -197,14 +161,8 @@ def substitute_variables(
     def repl(m: "re.Match[str]") -> str:
         return lookup(m.group(1)).literal
 
-    out = []
-    for a, b, is_code in _scan_outside_literals(sql):
-        seg = sql[a:b]
-        if is_code:
-            seg = _IDENTIFIER_REF.sub(ident_repl, seg)
-            seg = _VAR_REF.sub(repl, seg)
-        out.append(seg)
-    return "".join(out)
+    sql = sub_in_code(_IDENTIFIER_REF, ident_repl, sql)
+    return sub_in_code(_VAR_REF, repl, sql)
 
 
 def _eval_scalar(spark: SparkSession, expr: str):
@@ -213,53 +171,6 @@ def _eval_scalar(spark: SparkSession, expr: str):
     most; a pure-literal expression folds to a LocalRelation."""
     row = spark.sql(lower_select(f"SELECT ({expr}) AS __v")).first()
     return row["__v"]
-
-
-def _split_script(text: str) -> list[str]:
-    """Statement split for console scripts: top-level ``;`` outside
-    '...' literals, ``$$...$$`` dollar-quoted strings, and comments —
-    so an EXECUTE IMMEDIATE body keeps its internal separators."""
-    out: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "$" and text[i + 1 : i + 2] == "$":
-            j = text.find("$$", i + 2)
-            j = n if j < 0 else j + 2
-            buf.append(text[i:j])
-            i = j
-        elif c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'" and text[j + 1 : j + 2] == "'":
-                    j += 2
-                elif text[j] == "'":
-                    break
-                else:
-                    j += 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-        elif c == "-" and text[i + 1 : i + 2] == "-":
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            buf.append(text[i:j])
-            i = j
-        elif c == "/" and text[i + 1 : i + 2] == "*":
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            buf.append(text[i:j])
-            i = j
-        elif c == ";":
-            out.append("".join(buf))
-            buf = []
-            i += 1
-        else:
-            buf.append(c)
-            i += 1
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    return [s for s in (x.strip() for x in out) if s]
 
 
 _SET_RE = re.compile(
@@ -405,7 +316,7 @@ def _is_block(stmt: str) -> bool:
     """Anonymous scripting block vs transaction BEGIN: a block starts
     with DECLARE, or with BEGIN followed by more than a transaction
     keyword (its body ends with END)."""
-    s = _strip_line_comments(stmt).strip()
+    s = strip_line_comments(stmt).strip()
     if re.match(r"DECLARE\b", s, re.IGNORECASE):
         return True
     if re.match(r"BEGIN\b", s, re.IGNORECASE):
@@ -489,9 +400,9 @@ def console_script(
         procedures = {}
     result: DataFrame | None = None
     whole = text.strip()
-    stmts = [whole] if _is_block(whole) else _split_script(text)
+    stmts = [whole] if _is_block(whole) else split_statements(text)
     for stmt in stmts:
-        bare = _strip_line_comments(stmt).strip().rstrip(";").strip()
+        bare = strip_line_comments(stmt).strip().rstrip(";").strip()
         if not bare:
             continue
         low = " ".join(bare.lower().split())
@@ -588,7 +499,7 @@ def console_script(
         )
         if tables is not None:
             dm = _DML_HEAD_RE.match(
-                _strip_line_comments(resolved).strip()
+                strip_line_comments(resolved).strip()
             )
             if dm is not None:
                 tables[_dml_key(tables, dm.group("t"))] = result
@@ -659,7 +570,7 @@ def create_function_statement(spark: SparkSession, text: str) -> DataFrame:
     (strictness Spark's SQL UDFs cannot encode) refuse loudly. UDFs
     may call other UDFs — resolution happens at Spark's analysis time
     exactly like Snowflake's."""
-    s = _strip_line_comments(text).strip().rstrip(";").strip()
+    s = strip_line_comments(text).strip().rstrip(";").strip()
     if re.search(r"RETURNS\s+TABLE", s, re.IGNORECASE):
         raise ValueError(
             "CREATE FUNCTION ... RETURNS TABLE: table functions are not"
@@ -836,10 +747,8 @@ def _cond_and_rest(stmt: str, head_kw: str, then_kw: str) -> tuple[str, str]:
     """Split ``IF (cond) THEN rest`` / ``WHILE (cond) DO rest`` with a
     BALANCED-paren condition (the condition may itself contain calls
     and subqueries). Snowflake Scripting requires the parentheses."""
-    from .sqldialect import _balanced_span
-
     open_idx = stmt.index("(")
-    close = _balanced_span(stmt, open_idx)
+    close = balanced_end(stmt, open_idx)
     cond = stmt[open_idx + 1 : close - 1].strip()
     tail = stmt[close:].lstrip()
     km = re.match(rf"{then_kw}\b(?P<rest>.*)$", tail,
@@ -868,7 +777,7 @@ def _parse_block_body(
     nodes: list = []
     while stmts:
         raw = stmts.pop(0)
-        bare = _strip_line_comments(raw).strip()
+        bare = strip_line_comments(raw).strip()
         if not bare:
             continue
         kind = None
@@ -959,12 +868,11 @@ def _parse_block_body(
             # a simple-CASE subject turns each WHEN value into an
             # equality condition (standard CASE semantics — a NULL
             # subject matches nothing and falls to ELSE)
-            from .sqldialect import _balanced_span
 
             rest = casem.group("rest").strip()
             subject = None
             if rest.startswith("("):
-                close = _balanced_span(rest, 0)
+                close = balanced_end(rest, 0)
                 subject = rest[1:close - 1].strip()
                 rest = rest[close:].strip()
             nxt = rest
@@ -976,7 +884,7 @@ def _parse_block_body(
                         raise ValueError(
                             "CASE block: expected WHEN ... THEN"
                         )
-                    nxt = _strip_line_comments(stmts.pop(0)).strip()
+                    nxt = strip_line_comments(stmts.pop(0)).strip()
                 wm = _CASE_WHEN_RE.match(nxt)
                 if wm is None:
                     raise ValueError(
@@ -1052,9 +960,8 @@ def _parse_block_body(
             if rest:
                 stmts.insert(0, rest)
             body, term = _parse_block_body(stmts, ("UNTIL",))
-            from .sqldialect import _balanced_span
             open_idx = term.index("(")
-            close = _balanced_span(term, open_idx)
+            close = balanced_end(term, open_idx)
             cond = term[open_idx + 1 : close - 1].strip()
             tail = term[close:].strip()
             if not re.fullmatch(r"END\s+REPEAT", tail, re.IGNORECASE):
@@ -1128,14 +1035,12 @@ def _subst_block_vars(
         + r")\b",
         re.IGNORECASE,
     )
-    out = []
-    for a, b, is_code in _scan_outside_literals(expr):
-        seg = expr[a:b]
-        out.append(
-            rx.sub(lambda m: block_vars[m.group(1).upper()].literal, seg)
-            if is_code else seg
-        )
-    return "".join(out)
+    return sub_in_code(
+        rx, lambda m: block_vars[m.group(1).upper()].literal, expr
+    )
+
+
+_BIND_REF = re.compile(r"(?<!:):([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)")
 
 
 def _subst_binds(
@@ -1161,18 +1066,9 @@ def _subst_binds(
                 return block_vars[head.upper()].literal + "." + tail
         raise ValueError(f"undeclared bind variable :{m.group(1)}")
 
-    out = []
-    for a, b, is_code in _scan_outside_literals(sql):
-        seg = sql[a:b]
-        if is_code:
-            # dotted names cover cursor-row fields (:rec.col); the
-            # longer spelling must win, so the dot arm is greedy
-            seg = re.sub(
-                r"(?<!:):([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)",
-                lambda m: repl(m), seg,
-            )
-        out.append(seg)
-    return "".join(out)
+    # dotted names cover cursor-row fields (:rec.col); the longer
+    # spelling must win, so the dot arm is greedy
+    return sub_in_code(_BIND_REF, repl, sql)
 
 
 def scripting_block(
@@ -1304,7 +1200,7 @@ def scripting_block(
         )
         return rdf.localCheckpoint(eager=True)
 
-    for decl in _split_script(m.group("decl") or ""):
+    for decl in split_statements(m.group("decl") or ""):
         # tolerate a repeated DECLARE keyword per entry (Snowflake
         # needs it once, but real pastes write both spellings)
         decl = re.sub(r"^DECLARE\s+", "", decl.strip(), flags=re.IGNORECASE)
@@ -1669,17 +1565,17 @@ def scripting_block(
     # split the statement stream at the EXCEPTION section head (one
     # section per block, Snowflake's shape; handler clauses are WHEN
     # <name> [OR <name>]* THEN <statements> in declaration order)
-    body_stmts = _split_script(m.group("body"))
+    body_stmts = split_statements(m.group("body"))
     handler_stmts: list[str] = []
     for idx, st in enumerate(body_stmts):
-        xm = _EXC_SECTION_RE.match(_strip_line_comments(st).strip())
+        xm = _EXC_SECTION_RE.match(strip_line_comments(st).strip())
         if xm is not None:
             handler_stmts = [xm.group("rest")] + body_stmts[idx + 1 :]
             body_stmts = body_stmts[:idx]
             break
     handlers: list[tuple[list[str], list]] = []
     while handler_stmts:
-        head = _strip_line_comments(handler_stmts.pop(0)).strip()
+        head = strip_line_comments(handler_stmts.pop(0)).strip()
         wm = _WHEN_CLAUSE_RE.match(head)
         if wm is None:
             raise ValueError(
@@ -1827,7 +1723,7 @@ def create_procedure_statement(
     Non-SQL LANGUAGEs refuse; EXECUTE AS is tolerated (the engine has
     one principal). The RETURNS type is advisory, like Snowflake's
     own (the block's RETURN value is what comes back)."""
-    s = _strip_line_comments(text).strip().rstrip(";").strip()
+    s = strip_line_comments(text).strip().rstrip(";").strip()
     m = _CREATE_PROC_RE.match(s)
     if m is None:
         raise ValueError(

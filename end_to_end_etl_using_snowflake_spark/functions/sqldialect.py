@@ -31,59 +31,32 @@ from __future__ import annotations
 
 import re
 
-_WORD = re.compile(r"[A-Za-z_]+")
-
-
-def _top_level_keyword(sql: str, keyword: str, start: int = 0) -> int:
-    """Index of the first top-level (paren-depth-0, outside string
-    literals, ``"quoted"`` identifiers, and ``--``/``/* */`` comments)
-    occurrence of ``keyword``; -1 if absent."""
-    depth = 0
-    i = start
-    kw = keyword.upper()
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "(":
-            depth += 1
-            i += 1
-        elif c == ")":
-            depth -= 1
-            i += 1
-        elif c == "'" or c == '"':
-            quote = c
-            i += 1
-            while i < n and sql[i] != quote:
-                i += 1
-            i += 1
-        elif c == "-" and sql[i : i + 2] == "--":
-            i = sql.find("\n", i)
-            if i < 0:
-                return -1
-        elif c == "/" and sql[i : i + 2] == "/*":
-            end = sql.find("*/", i + 2)
-            if end < 0:
-                return -1
-            i = end + 2
-        elif c.isalpha() or c == "_":
-            m = _WORD.match(sql, i)
-            word = m.group(0)
-            if depth == 0 and word.upper() == kw:
-                return i
-            i = m.end()
-        else:
-            i += 1
-    return -1
+from .sqllex import (
+    DOLLAR,
+    STRING,
+    balanced_end,
+    code_tokens,
+    find_keyword,
+    in_code,
+    lex,
+    paren_depth,
+    replace_spans,
+    split_statements,
+    split_top_level,
+    string_end,
+    strip_line_comments,
+    sub_in_code,
+)
 
 
 def rewrite_qualify(sql: str) -> str:
     """Lower a single top-level ``QUALIFY`` to the ANSI subquery form;
     returns the input unchanged when no top-level QUALIFY exists."""
-    q = _top_level_keyword(sql, "QUALIFY")
+    q = find_keyword(sql, "QUALIFY")
     if q < 0:
         return sql
-    sel = _top_level_keyword(sql, "SELECT")
-    frm = _top_level_keyword(sql, "FROM", start=sel)
+    sel = find_keyword(sql, "SELECT")
+    frm = find_keyword(sql, "FROM", start=sel)
     if sel < 0 or frm < 0 or not (sel < frm < q):
         raise ValueError("unsupported QUALIFY query shape (need SELECT ... FROM ... QUALIFY ...)")
     select_list = sql[sel + len("SELECT"):frm].strip()
@@ -94,7 +67,7 @@ def rewrite_qualify(sql: str) -> str:
     after = q + len("QUALIFY")
     tail_at = len(sql)
     for kw in ("ORDER", "LIMIT"):
-        k = _top_level_keyword(sql, kw, start=after)
+        k = find_keyword(sql, kw, start=after)
         if 0 <= k < tail_at:
             tail_at = k
     pred = sql[after:tail_at].strip().rstrip(";").strip()
@@ -107,28 +80,6 @@ def rewrite_qualify(sql: str) -> str:
         ") WHERE __qualify"
         + (f" {tail}" if tail else "")
     )
-
-
-def _balanced_span(sql: str, open_idx: int) -> int:
-    """Index just past the ')' matching the '(' at ``open_idx``
-    (string-literal aware)."""
-    depth = 0
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        elif c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        i += 1
-    raise ValueError("unbalanced parentheses in FLATTEN call")
 
 
 _FLATTEN_HEAD = re.compile(r",?\s*LATERAL\s+FLATTEN\s*\(", re.IGNORECASE)
@@ -195,7 +146,7 @@ def rewrite_connect_by(sql: str) -> str:
     string adds O(depth * key width) state per frontier row — the
     same order as SYS_CONNECT_BY_PATH itself.
     """
-    if _top_level_keyword(sql, "CONNECT") < 0:
+    if find_keyword(sql, "CONNECT") < 0:
         return sql
     m = _CONNECT_RE.search(sql.strip().rstrip(";"))
     if m is None:
@@ -222,8 +173,8 @@ def rewrite_connect_by(sql: str) -> str:
         mp = _SCBP_RE.search(sel)
         if mp is None:
             break
-        close = _balanced_span(sel, mp.end() - 1)
-        args = _split_top_level_commas(sel[mp.end() : close - 1])
+        close = balanced_end(sel, mp.end() - 1)
+        args = split_top_level(sel[mp.end() : close - 1], ",")
         if len(args) != 2:
             raise ValueError("SYS_CONNECT_BY_PATH needs (column, 'separator')")
         col, sep = args[0].strip(), args[1].strip()
@@ -287,46 +238,24 @@ _SQL_NON_COLUMN_WORDS = frozenset(
 )
 
 
+# a word not preceded by '.'; group 1 is set when a '(' (a call) or a
+# '.' (a qualifier) follows it
+_BARE_IDENT = re.compile(r"(?<![\w.$])[A-Za-z_][\w$]*(\s*[(.])?")
+
+
 def _qualify_idents(expr: str, alias: str) -> str:
     """Prefix bare column identifiers in ``expr`` with ``alias.`` —
     function names (followed by '('), SQL keywords/type names, already-
     qualified references, and numeric/string literals are left alone.
     Used to bind CONNECT BY's parent expression to the child side of
     the recursive join, where the bare name would be ambiguous."""
-    out: list[str] = []
-    i = 0
-    n = len(expr)
-    while i < n:
-        c = expr[i]
-        if c == "'":
-            j = i + 1
-            while j < n and expr[j] != "'":
-                j += 1
-            out.append(expr[i : j + 1])
-            i = j + 1
-        elif c.isalpha() or c == "_":
-            m = _WORD.match(expr, i)
-            word = m.group(0)
-            j = m.end()
-            k = j
-            while k < n and expr[k].isspace():
-                k += 1
-            prev = out[-1][-1] if out and out[-1] else ""
-            is_func = k < n and expr[k] == "("
-            is_qualified = prev == "." or (k < n and expr[k] == ".")
-            if (
-                not is_func
-                and not is_qualified
-                and word.upper() not in _SQL_NON_COLUMN_WORDS
-            ):
-                out.append(f"{alias}.{word}")
-            else:
-                out.append(word)
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+    def repl(m: "re.Match[str]") -> str:
+        word = m.group(0)
+        if m.group(1) is None and word.upper() not in _SQL_NON_COLUMN_WORDS:
+            return f"{alias}.{word}"
+        return word
+
+    return sub_in_code(_BARE_IDENT, repl, expr)
 
 
 # ---------------------------------------------------------------------------
@@ -461,31 +390,6 @@ def rewrite_sample(sql: str, keys: dict[str, str] | None = None) -> str:
 _FLATTEN_ALIAS = re.compile(r"\s*(?:AS\s+)?([A-Za-z_][A-Za-z_0-9]*)")
 
 
-def _split_top_level_commas(text: str) -> list[str]:
-    """Split on commas at paren depth 0, skipping string literals."""
-    parts: list[str] = []
-    depth = 0
-    start = 0
-    i = 0
-    n = len(text)
-    while i < n:
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "'":
-            i += 1
-            while i < n and text[i] != "'":
-                i += 1
-        elif c == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return parts
-
-
 _FLAT_PATH = re.compile(
     r'(?:[A-Za-z_]\w*|"[^"]+")(?:\.(?:[A-Za-z_]\w*|"[^"]+"))*'
 )
@@ -537,7 +441,7 @@ def _parse_flatten_args(
     mode: str | None = None
     path: str | None = None
     recursive = False
-    for part in _split_top_level_commas(inner):
+    for part in split_top_level(inner, ","):
         part = part.strip()
         if not part:
             continue
@@ -621,7 +525,7 @@ def rewrite_flatten(sql: str) -> str:
         if m is None:
             return out
         open_idx = out.index("(", m.start() + out[m.start():m.end()].upper().find("FLATTEN"))
-        close = _balanced_span(out, open_idx)
+        close = balanced_end(out, open_idx)
         inner = out[open_idx + 1:close - 1].strip()
         expr, outer, mode, path, recursive = _parse_flatten_args(inner)
         if recursive:
@@ -781,12 +685,12 @@ def flatten_recursive_statement(spark, text: str):  # noqa: ANN001
     with optional AS. MODE defaults to 'BOTH' here — Snowflake's real
     default, which the recursion makes meaningful (the one-level
     rewriter keeps its documented ARRAY default)."""
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.search(r"^SELECT\s+(?P<sel>.*?)\s+FROM\s*\(", sql, re.IGNORECASE | re.DOTALL)
     if m is None:
         raise ValueError("flatten_recursive_statement needs SELECT ... FROM (subquery)")
     open_idx = sql.index("(", m.end() - 1)
-    close = _balanced_span(sql, open_idx)
+    close = balanced_end(sql, open_idx)
     subquery = sql[open_idx + 1 : close - 1]
     tail = sql[close:]
     tm = re.match(
@@ -800,7 +704,7 @@ def flatten_recursive_statement(spark, text: str):  # noqa: ANN001
         )
     ba = tm.group("ba")
     f_open = close + tm.end() - 1
-    f_close = _balanced_span(sql, f_open)
+    f_close = balanced_end(sql, f_open)
     expr, outer, mode, path, recursive = _parse_flatten_args(
         sql[f_open + 1 : f_close - 1]
     )
@@ -820,7 +724,7 @@ def flatten_recursive_statement(spark, text: str):  # noqa: ANN001
     base = spark.sql(subquery)
     flat = flatten_recursive(base, em.group(1), mode=mode or "BOTH")
     out_cols = []
-    for item in _split_top_level_commas(m.group("sel")):
+    for item in split_top_level(m.group("sel"), ","):
         item = item.strip()
         im = re.fullmatch(
             r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)(?:\s+AS\s+([A-Za-z_]\w*))?",
@@ -932,7 +836,7 @@ def asof_dialect(sql: str, tables: dict) -> "DataFrame":  # noqa: F821
         right = right.withColumnRenamed(rts, lts)
     items = [
         _ASOF_ITEM.match(item.strip())
-        for item in _split_top_level_commas(m.group("sel"))
+        for item in split_top_level(m.group("sel"), ",")
     ]
     if any(i is None for i in items):
         raise ValueError("ASOF select list supports alias.col [AS name] items")
@@ -996,24 +900,24 @@ def rewrite_generator(sql: str) -> str:
         raise ValueError("GENERATOR(TIMELIMIT) is nondeterministic; use ROWCOUNT")
     # literal-aware substitutions (r13, rewriter property battery:
     # 'SEQ4()' as string CONTENT was being rewritten to '__gen_seq')
-    out = _sub_outside_literals(
+    out = sub_in_code(
         _GENERATOR_RE,
         lambda m: f"(SELECT id AS __gen_seq FROM range({m.group(1)}))",
         sql,
     )
-    out = _sub_outside_literals(_SEQ_RE, lambda m: "__gen_seq", out)
+    out = sub_in_code(_SEQ_RE, lambda m: "__gen_seq", out)
     # DATEADD(unit, k, d) -> date_add / add_months (balanced-paren args)
     da_pos = 0
     while True:
         m = _DATEADD_HEAD.search(out, da_pos)
         if m is None:
             return out
-        if out[: m.start()].count("'") % 2 == 1:  # inside a literal
+        if not in_code(out, m.start()):
             da_pos = m.end()
             continue
         open_idx = out.index("(", m.start())
-        close = _balanced_span(out, open_idx)
-        args = _split_top_level_commas(out[open_idx + 1 : close - 1])
+        close = balanced_end(out, open_idx)
+        args = split_top_level(out[open_idx + 1 : close - 1], ",")
         if len(args) != 3:
             raise ValueError("DATEADD expects (unit, n, date)")
         unit = args[0].strip().strip("'\"").lower()
@@ -1156,49 +1060,6 @@ def _dml_table(tables: dict, name: str):
     return tables[_dml_key(tables, name)]
 
 
-def _split_statements(text: str) -> list[str]:
-    """Split a multi-statement script on top-level ``;`` — aware of
-    '...' string literals (with '' self-escape), ``--`` line comments,
-    and ``/* */`` block comments, so separators inside any of those
-    never split."""
-    out: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'" and text[j + 1 : j + 2] == "'":
-                    j += 2
-                elif text[j] == "'":
-                    break
-                else:
-                    j += 1
-            buf.append(text[i : j + 1])
-            i = j + 1
-        elif c == "-" and text[i + 1 : i + 2] == "-":
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            buf.append(text[i:j])
-            i = j
-        elif c == "/" and text[i + 1 : i + 2] == "*":
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            buf.append(text[i:j])
-            i = j
-        elif c == ";":
-            out.append("".join(buf))
-            buf = []
-            i += 1
-        else:
-            buf.append(c)
-            i += 1
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    return [s for s in (x.strip() for x in out) if s]
-
-
 _DML_HEAD_RE = re.compile(
     r"^(?P<head>MERGE\s+INTO|INSERT\s+OVERWRITE(?:\s+INTO)?|INSERT\s+INTO|"
     r"UPDATE|DELETE\s+FROM)\s+(?P<t>[\w.]+)",
@@ -1226,8 +1087,8 @@ def transaction_script(spark, text: str, tables: dict) -> dict:  # noqa: ANN001
     storage-layer protocol's text-level analog)."""
     live = dict(tables)
     working: dict | None = None
-    for stmt in _split_statements(text):
-        stmt = _strip_line_comments(stmt).strip()
+    for stmt in split_statements(text):
+        stmt = strip_line_comments(stmt).strip()
         if not stmt:
             continue
         low = " ".join(stmt.lower().split())
@@ -1283,13 +1144,13 @@ def update_statement(spark, text: str, tables: dict):  # noqa: ANN001
 
     from ..operators.dml import update_where
 
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = _UPDATE_RE.match(sql)
     if m is None:
         raise ValueError("unsupported UPDATE shape (UPDATE t SET ... [WHERE ...])")
     df = _dml_table(tables, m.group("t"))
     assignments = {}
-    for part in _split_top_level_commas(m.group("set")):
+    for part in split_top_level(m.group("set"), ","):
         eq = part.find("=")
         if eq < 0:
             raise ValueError(f"SET item needs '=': {part.strip()!r}")
@@ -1327,7 +1188,7 @@ def insert_statement(spark, text: str, tables: dict):  # noqa: ANN001
     overwrite, like the other statement shims."""
     from pyspark.sql import functions as F
 
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = _INSERT_RE.match(sql)
     if m is None:
         raise ValueError(
@@ -1388,7 +1249,7 @@ def delete_statement(spark, text: str, tables: dict):  # noqa: ANN001
 
     from ..operators.dml import delete_where
 
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = _DELETE_RE.match(sql)
     if m is None:
         raise ValueError(
@@ -1436,7 +1297,7 @@ def ctas_statement(spark, text: str, tables: dict):  # noqa: ANN001
     it. Snowflake's SECURE modifier parses and is recorded only as
     text here (the masking/row-policy machinery in plans/governance.py
     is the engine's real secured-view surface — pl_secured_view)."""
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = _CTAS_RE.match(sql)
     if m is None:
         raise ValueError(
@@ -1485,7 +1346,7 @@ def changes_statement(spark, text: str, log, changes, keys):  # noqa: ANN001
     as time travel (Changelog.version_at); the diff is
     streaming/changelog.py:table_changes. ``log``/``changes``/``keys``
     bind the engine changelog exactly as the AT/BEFORE executors do."""
-    m = _CHANGES_RE.match(_strip_line_comments(text).strip().rstrip(";"))
+    m = _CHANGES_RE.match(strip_line_comments(text).strip().rstrip(";"))
     if m is None:
         raise ValueError(
             "unsupported CHANGES shape (need SELECT * FROM <t> CHANGES"
@@ -1511,22 +1372,6 @@ _MERGE_HEAD = re.compile(
     r"MERGE\s+INTO\s+(?P<target>[\w.]+)\s+USING\s+", re.IGNORECASE
 )
 _MERGE_WHEN = re.compile(r"WHEN\s+(?P<neg>NOT\s+)?MATCHED\b", re.IGNORECASE)
-
-
-def _strip_line_comments(sql: str) -> str:
-    out = []
-    for line in sql.splitlines():
-        i, n = 0, len(line)
-        in_str = False
-        while i < n:
-            c = line[i]
-            if c == "'":
-                in_str = not in_str
-            elif not in_str and c == "-" and line[i : i + 2] == "--":
-                break
-            i += 1
-        out.append(line[:i])
-    return "\n".join(out)
 
 
 def merge_statement(
@@ -1578,7 +1423,7 @@ def merge_statement(
     (customer-...sql DDL defaults; pass a frozen literal for the F1
     injectable clock).
     """
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     short = {name: name.split(".")[-1] for name in tables}
     for name, s in short.items():
         if name != s:
@@ -1592,7 +1437,7 @@ def merge_statement(
     while sql[i].isspace():
         i += 1
     if sql[i] == "(":
-        close = _balanced_span(sql, i)
+        close = balanced_end(sql, i)
         subquery = sql[i + 1 : close - 1]
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", sql[close:], re.IGNORECASE)
         if am is None:
@@ -1623,7 +1468,7 @@ def merge_statement(
     for ci, w in enumerate(whens):
         end = whens[ci + 1].start() if ci + 1 < len(whens) else len(sql)
         body = sql[w.end() : end]
-        then_at = _top_level_keyword(body, "THEN")
+        then_at = find_keyword(body, "THEN")
         if then_at < 0:
             raise ValueError("WHEN clause missing THEN")
         pre = body[:then_at].strip()
@@ -1640,19 +1485,19 @@ def merge_statement(
                 raise ValueError("WHEN NOT MATCHED supports only INSERT (cols)")
             if insert_clause is not None:
                 raise ValueError("at most one WHEN NOT MATCHED INSERT clause")
-            cols_close = _balanced_span(action, im.end() - 1)
+            cols_close = balanced_end(action, im.end() - 1)
             insert_cols = [
                 c.strip()
-                for c in _split_top_level_commas(action[im.end() : cols_close - 1])
+                for c in split_top_level(action[im.end() : cols_close - 1], ",")
             ]
             vm = re.match(r"\s*VALUES\s*\(", action[cols_close:], re.IGNORECASE)
             if vm is None:
                 raise ValueError("INSERT requires a VALUES (...) list")
             v_open = cols_close + vm.end() - 1
-            v_close = _balanced_span(action, v_open)
+            v_close = balanced_end(action, v_open)
             insert_vals = [
                 v.strip()
-                for v in _split_top_level_commas(action[v_open + 1 : v_close - 1])
+                for v in split_top_level(action[v_open + 1 : v_close - 1], ",")
             ]
             if len(insert_cols) != len(insert_vals):
                 raise ValueError("INSERT column/value count mismatch")
@@ -1688,7 +1533,7 @@ def merge_statement(
 
     set_map: dict[str, str] = {}
     if update_clause is not None:
-        for part in _split_top_level_commas(update_clause[2]):
+        for part in split_top_level(update_clause[2], ","):
             part = part.strip()
             if not part:
                 continue
@@ -1699,7 +1544,7 @@ def merge_statement(
 
     # source-side null-probe for the match flag (keys are non-null by
     # the merge contract)
-    first = _split_top_level_commas(cond.replace(" AND ", ","))[0]
+    first = split_top_level(cond.replace(" AND ", ","), ",")[0]
     sides = [s.strip() for s in first.split("=")]
     probe = next(
         (s for s in sides if s.split(".")[0].lower() == sname.lower()), sides[-1]
@@ -1799,7 +1644,7 @@ def insert_overwrite_statement(spark, text: str, tables: dict) -> "DataFrame":  
     commented-out join residual, order-...sql:203). Snowflake maps
     SELECT items to the insert columns BY POSITION — so does this.
     """
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     short = {name: name.split(".")[-1] for name in tables}
     for name, s in short.items():
         if name != s:
@@ -1807,8 +1652,8 @@ def insert_overwrite_statement(spark, text: str, tables: dict) -> "DataFrame":  
     m = _INSERT_OVERWRITE_RE.search(sql)
     if m is None:
         raise ValueError("not an INSERT OVERWRITE INTO ... (cols) SELECT statement")
-    close = _balanced_span(sql, m.end() - 1)
-    cols = [c.strip() for c in _split_top_level_commas(sql[m.end() : close - 1])]
+    close = balanced_end(sql, m.end() - 1)
+    cols = [c.strip() for c in split_top_level(sql[m.end() : close - 1], ",")]
     select = sql[close:].strip()
     if not re.match(r"SELECT\b", select, re.IGNORECASE):
         raise ValueError("INSERT OVERWRITE requires a SELECT body")
@@ -1849,7 +1694,7 @@ def parse_pipe_ddl(text: str) -> dict:
     format's existing translation (sources/csv_format.py docstring);
     other types pass through to FileFormat. Refuses on missing COPY
     INTO body rather than guessing."""
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = _PIPE_DDL_RE.search(sql)
     if m is None:
         raise ValueError(
@@ -1858,7 +1703,7 @@ def parse_pipe_ddl(text: str) -> dict:
             " [FILE_FORMAT = (...)])"
         )
     fmt_opts: dict[str, str] = {}
-    for part in _split_top_level_commas(m.group("fmt") or ""):
+    for part in split_top_level(m.group("fmt") or "", ","):
         part = part.strip()
         if not part:
             continue
@@ -1906,7 +1751,7 @@ def parse_task_ddls(text: str) -> list[dict]:
     split on the ``;`` that precedes the next CREATE TASK, so merge
     bodies with no inner semicolons pass through verbatim."""
     out = []
-    for m in _TASK_DDL_RE.finditer(_strip_line_comments(text)):
+    for m in _TASK_DDL_RE.finditer(strip_line_comments(text)):
         body = m.group("body").strip().rstrip(";").strip()
         up = body.upper()
         if up.startswith("MERGE INTO"):
@@ -1959,7 +1804,7 @@ def parse_stream_ddls(text: str) -> list[dict]:
     advancing offset over its source table's change log."""
     out = [
         {"name": m.group("name"), "table": m.group("table")}
-        for m in _STREAM_DDL_RE.finditer(_strip_line_comments(text))
+        for m in _STREAM_DDL_RE.finditer(strip_line_comments(text))
     ]
     if not out:
         raise ValueError("no CREATE OR REPLACE STREAM statements found")
@@ -4407,7 +4252,7 @@ def _to_json_rewrite(args: list) -> str:
     core = args[0].strip()
     while (
         core.startswith("(")
-        and _balanced_span(core, 0) == len(core)
+        and balanced_end(core, 0) == len(core)
     ):
         core = core[1:-1].strip()
     low = core.lower()
@@ -4469,12 +4314,11 @@ def _decode_rewrite(args: list) -> str:
     if len(args) < 3:
         raise ValueError("DECODE needs (expr, search, result [, ...] [, default])")
     expr, rest = args[0], args[1:]
-    branches = []
-    i = 0
-    while i + 1 < len(rest):
-        # Snowflake DECODE matches NULL to NULL — null-safe equality
-        branches.append(f"WHEN ({expr}) <=> ({rest[i]}) THEN {rest[i + 1]}")
-        i += 2
+    # Snowflake DECODE matches NULL to NULL — null-safe equality
+    branches = [
+        f"WHEN ({expr}) <=> ({rest[i]}) THEN {rest[i + 1]}"
+        for i in range(0, len(rest) - 1, 2)
+    ]
     default = f" ELSE {rest[-1]}" if len(rest) % 2 == 1 else ""
     return "CASE " + " ".join(branches) + default + " END"
 
@@ -4632,21 +4476,8 @@ def _regex_int_literal(name: str, args: list, idx: int, default: int) -> int:
 
 _REGEXP_INFIX_RE = re.compile(r"\b(?:RLIKE|REGEXP)\b", re.IGNORECASE)
 _INFIX_IDENT_RE = re.compile(r"[A-Za-z_][\w.]*")
-
-
-def _scan_string_end(sql: str, start: int) -> int:
-    """Index just past a '...' literal starting at ``start`` ('' is the
-    embedded-quote escape)."""
-    k = start + 1
-    n = len(sql)
-    while k < n:
-        if sql[k] == "'":
-            if k + 1 < n and sql[k + 1] == "'":
-                k += 2
-                continue
-            return k + 1
-        k += 1
-    raise ValueError(f"unterminated string literal at {sql[start:start+30]!r}")
+_WS = re.compile(r"\s*")
+_CONCAT_OP = re.compile(r"\s*\|\|\s*")
 
 
 def _regexp_operand_end(sql: str, j: int) -> int:
@@ -4657,9 +4488,9 @@ def _regexp_operand_end(sql: str, j: int) -> int:
     delimit."""
     n = len(sql)
     if j < n and sql[j] == "'":
-        return _scan_string_end(sql, j)
+        return string_end(sql, j)
     if j < n and sql[j] == "(":
-        return _balanced_span(sql, j)
+        return balanced_end(sql, j)
     im = _INFIX_IDENT_RE.match(sql, j)
     if im is None:
         raise ValueError(
@@ -4672,27 +4503,16 @@ def _regexp_operand_end(sql: str, j: int) -> int:
     end = im.end()
     rest = sql[end:]
     if rest.lstrip().startswith("("):
-        end = _balanced_span(sql, sql.index("(", end))
+        end = balanced_end(sql, sql.index("(", end))
     return end
 
 
-def _sub_outside_literals(pattern: "re.Pattern[str]", repl, sql: str) -> str:
-    """re.sub, but matches inside '...' string literals are left
-    untouched ('' doubling keeps the quote parity correct)."""
-    out = []
-    pos = 0
-    while True:
-        m = pattern.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        if sql[: m.start()].count("'") % 2 == 1:
-            out.append(sql[pos : m.end()])
-            pos = m.end()
-            continue
-        out.append(sql[pos : m.start()])
-        out.append(repl(m))
-        pos = m.end()
+def _operand_chain_end(sql: str, j: int) -> int:
+    """End of a ``seg (|| seg)*`` pattern operand starting at ``j``."""
+    end = _regexp_operand_end(sql, j)
+    while (cm := _CONCAT_OP.match(sql, end)) is not None:
+        end = _regexp_operand_end(sql, cm.end())
+    return end
 
 
 def rewrite_regexp_infix(sql: str) -> str:
@@ -4712,23 +4532,20 @@ def rewrite_regexp_infix(sql: str) -> str:
         m = _REGEXP_INFIX_RE.search(sql, pos)
         if m is None:
             return sql
-        # inside a string literal? ('' doubling keeps parity correct)
-        if sql[: m.start()].count("'") % 2 == 1:
+        # inside quoted text or a comment?
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
-        j = m.end()
-        n = len(sql)
-        while j < n and sql[j].isspace():
-            j += 1
-        if j >= n:
+        j = _WS.match(sql, m.end()).end()
+        if j >= len(sql):
             return sql
         if sql[j] == "(":
-            end = _balanced_span(sql, j)
+            end = balanced_end(sql, j)
             # `RLIKE(subject, pattern[, params])` — the FUNCTION form
             # (>= 2 top-level args) — belongs to the scalar-head pass;
             # a single top-level operand is the parenthesized INFIX
             # pattern and anchors below.
-            if len(_split_top_level_commas(sql[j + 1 : end - 1])) > 1:
+            if len(split_top_level(sql[j + 1 : end - 1], ",")) > 1:
                 pos = end
                 continue
         # parse the pattern operand as a ``seg (|| seg)*`` chain —
@@ -4736,17 +4553,7 @@ def rewrite_regexp_infix(sql: str) -> str:
         # pattern (|| is tighter than the comparison in both
         # dialects), so anchoring only the first literal would
         # silently corrupt the regex (r13 self-review)
-        end = _regexp_operand_end(sql, j)
-        while True:
-            k = end
-            while k < n and sql[k].isspace():
-                k += 1
-            if sql[k : k + 2] != "||":
-                break
-            k += 2
-            while k < n and sql[k].isspace():
-                k += 1
-            end = _regexp_operand_end(sql, k)
+        end = _operand_chain_end(sql, j)
         op = sql[j:end]
         if op.startswith("'") and op.endswith("'") and "||" not in op:
             inner = op[1:-1]
@@ -5272,13 +5079,13 @@ def rewrite_window_dialect(sql: str) -> str:
             break
         fn = m.group("fn").upper()
         open_idx = out.index("(", m.end() - 1)
-        close = _balanced_span(out, open_idx)
+        close = balanced_end(out, open_idx)
         arg = out[open_idx + 1 : close - 1].strip()
         om = _OVER_RE.match(out[close:])
         if om is None:
             raise ValueError(f"{fn} requires an OVER (...) clause")
         w_open = close + om.end() - 1
-        w_close = _balanced_span(out, w_open)
+        w_close = balanced_end(out, w_open)
         win = out[w_open + 1 : w_close - 1].strip()
         rows_frame = f"{win} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
         if fn == "RATIO_TO_REPORT":
@@ -5303,8 +5110,8 @@ def rewrite_window_dialect(sql: str) -> str:
         out = out[: m.start()] + repl + out[w_close:]
     if not cce:
         return out
-    sel = _top_level_keyword(out, "SELECT")
-    frm = _top_level_keyword(out, "FROM", start=sel)
+    sel = find_keyword(out, "SELECT")
+    frm = find_keyword(out, "FROM", start=sel)
     if sel < 0 or frm < 0:
         raise ValueError(
             "CONDITIONAL_CHANGE_EVENT needs the plain SELECT ... FROM shape"
@@ -5312,7 +5119,7 @@ def rewrite_window_dialect(sql: str) -> str:
     select_list = out[sel + len("SELECT") : frm].strip()
     tail_at = len(out)
     for kw in ("ORDER", "LIMIT"):
-        k = _top_level_keyword(out, kw, start=frm)
+        k = find_keyword(out, kw, start=frm)
         if 0 <= k < tail_at:
             tail_at = k
     rest = out[frm:tail_at].strip().rstrip(";")
@@ -5356,11 +5163,11 @@ def rewrite_value_window_frames(sql: str) -> str:
         m = _VALUE_WIN_HEAD.search(sql, pos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         fn = m.group("fn").upper()
-        close = _balanced_span(sql, m.end() - 1)
+        close = balanced_end(sql, m.end() - 1)
         i = close
         fm = _FROM_DIR_RE.match(sql[i:])
         if fm is not None:
@@ -5391,11 +5198,11 @@ def rewrite_value_window_frames(sql: str) -> str:
             pos = close  # bare aggregate use (no OVER): leave untouched
             continue
         w_open = i + om.end() - 1
-        w_close = _balanced_span(sql, w_open)
+        w_close = balanced_end(sql, w_open)
         win = sql[w_open + 1 : w_close - 1]
-        has_order = _top_level_keyword(win, "ORDER") >= 0
+        has_order = find_keyword(win, "ORDER") >= 0
         has_frame = any(
-            _top_level_keyword(win, kw) >= 0
+            find_keyword(win, kw) >= 0
             for kw in ("ROWS", "RANGE", "GROUPS")
         )
         if has_order and not has_frame:
@@ -5428,6 +5235,7 @@ _ORDER_STOP = re.compile(
     r"(?i)\b(LIMIT|OFFSET|FETCH|ROWS|RANGE|GROUPS|UNION|EXCEPT|"
     r"INTERSECT|MINUS|WINDOW|QUALIFY|FOR)\b"
 )
+_ORDER_TOKEN = re.compile(r"[(),;]|\w+")
 
 
 def _annotate_order_item(item: str) -> str:
@@ -5440,95 +5248,34 @@ def _annotate_order_item(item: str) -> str:
     return body + " NULLS LAST" + pad
 
 
-def _inside_quotes(sql: str, upto: int) -> bool:
-    """True when position ``upto`` falls inside a '...' literal or a
-    "..." quoted identifier ('' / "" doubling respected). Shared guard
-    for scanners that must not fire on quoted text (advice r14: a bare
-    quote-parity count desyncs when one quote kind nests the other)."""
-    in_s = in_d = False
-    i = 0
-    while i < upto:
-        c = sql[i]
-        if in_s:
-            if c == "'":
-                if sql[i + 1 : i + 2] == "'":
-                    i += 1
-                else:
-                    in_s = False
-        elif in_d:
-            if c == '"':
-                if sql[i + 1 : i + 2] == '"':
-                    i += 1
-                else:
-                    in_d = False
-        elif c == "'":
-            in_s = True
-        elif c == '"':
-            in_d = True
-        i += 1
-    return in_s or in_d
-
-
 def rewrite_null_ordering(sql: str) -> str:
     pos = 0
     while True:
         m = _ORDER_BY_HEAD.search(sql, pos)
         if m is None:
             break
-        if _inside_quotes(sql, m.start()):
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         # walk the sort list: items split on depth-0 commas; the list
-        # ends at a depth-0 stop keyword, an unbalanced ')', or EOS
-        i = m.end()
-        n = len(sql)
+        # ends at a depth-0 stop keyword, an unbalanced ')', a
+        # statement terminator (verbatim pasted text keeps it), or EOS
         depth = 0
         items: list[str] = []
-        start = i
-        end = n
-        while i < n:
-            c = sql[i]
-            if c == "'" or c == '"':
-                # skip '...' literals AND "..." quoted identifiers —
-                # a comma inside "weird,name" is identifier text, not
-                # an item separator (advice r14)
-                q = c
-                j = i + 1
-                while j < n:
-                    if sql[j] == q and sql[j + 1 : j + 2] == q:
-                        j += 2
-                    elif sql[j] == q:
-                        break
-                    else:
-                        j += 1
-                i = j + 1
-                continue
+        start = m.end()
+        end = len(sql)
+        for t in code_tokens(sql, _ORDER_TOKEN, start):
+            c = t.group()
             if c == "(":
                 depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif c == ";" and depth == 0:
-                # statement terminator (verbatim pasted text keeps it)
-                end = i
+            elif depth == 0 and (c == ")" or c == ";" or _ORDER_STOP.fullmatch(c)):
+                end = t.start()
                 break
+            elif c == ")":
+                depth -= 1
             elif c == "," and depth == 0:
-                items.append(sql[start:i])
-                start = i + 1
-            elif depth == 0 and c.isalpha():
-                km = _ORDER_STOP.match(sql, i)
-                if km is not None:
-                    end = i
-                    break
-                # skip the rest of this word
-                j = i
-                while j < n and (sql[j].isalnum() or sql[j] == "_"):
-                    j += 1
-                i = j
-                continue
-            i += 1
+                items.append(sql[start : t.start()])
+                start = t.end()
         if end > start or items:
             items.append(sql[start:end])
         new_list = ",".join(_annotate_order_item(it) for it in items)
@@ -5557,7 +5304,7 @@ def rewrite_limit_null(sql: str) -> str:
         m = _LIMIT_NULL_RE.search(sql, pos)
         if m is None:
             break
-        if _inside_quotes(sql, m.start()):
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         sql = sql[: m.start()] + sql[m.end():]
@@ -5584,125 +5331,30 @@ def rewrite_dollar_strings(sql: str) -> str:
     procedure bodies — functions/scripting.py). The body is RAW in
     Snowflake (no escape processing, newlines allowed), so it lowers
     to a '...' literal with backslashes and quotes self-escaped.
-    Skips '...' literal and "..." identifier interiors (a ``$$``
-    inside either is text)."""
-    out = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = _scan_string_end(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == '"':
-            j = i + 1
-            while j < n:
-                if sql[j] == '"':
-                    if sql[j + 1 : j + 2] == '"':
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            out.append(sql[i:j])
-            i = j
-            continue
-        if (
-            c == "$"
-            and sql[i : i + 2] == "$$"
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_$"))
-        ):
-            # $ is legal in unquoted Snowflake identifiers (a$$b), so a
-            # $$ directly after an identifier character is identifier
-            # text, not a string opener (ADVICE r15 #4)
-            close = sql.find("$$", i + 2)
-            if close < 0:
-                raise ValueError("unterminated $$...$$ string")
-            body = sql[i + 2 : close]
-            out.append("'" + body.replace("\\", "\\\\").replace("'", "''") + "'")
-            i = close + 2
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    A ``$$`` inside quoted text or a comment is text."""
+    if lex(sql).unclosed == DOLLAR:
+        raise ValueError("unterminated $$...$$ string")
+    return replace_spans(
+        sql,
+        DOLLAR,
+        lambda t: "'" + t[2:-2].replace("\\", "\\\\").replace("'", "''") + "'",
+    )
 
 
-_HEX_ESC_RE = re.compile(r"\\x([0-9A-Fa-f]{2})")
+# one backslash pair: \xhh (group 1) or any other escaped char (group 2)
+_LITERAL_ESC_RE = re.compile(r"\\(?:x([0-9A-Fa-f]{2})|([\s\S]))")
+
+
+def _literal_escape(m: "re.Match[str]") -> str:
+    if m.group(1) is not None:
+        return "\\u00" + m.group(1).upper()
+    return "\\u000C" if m.group(2) == "f" else m.group(0)
 
 
 def rewrite_literal_escapes(sql: str) -> str:
-    out = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == '"':
-            # skip "..." quoted identifiers ("" doubling): an
-            # apostrophe inside one ("o'brien") otherwise desyncs the
-            # literal scanner and leaves a later real literal's
-            # \f/\xhh unconverged (ADVICE r15 #1)
-            j = i + 1
-            while j < n:
-                if sql[j] == '"':
-                    if sql[j + 1 : j + 2] == '"':
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j + 1
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c != "'":
-            out.append(c)
-            i += 1
-            continue
-        # inside a single-quoted literal: '' doubling AND \-escapes
-        j = i + 1
-        body = []
-        while j < n:
-            ch = sql[j]
-            if ch == "\\" and j + 1 < n:
-                nxt = sql[j + 1]
-                if nxt == "f":
-                    body.append("\\u000C")
-                    j += 2
-                    continue
-                hm = _HEX_ESC_RE.match(sql, j)
-                if hm is not None:
-                    body.append("\\u00" + hm.group(1).upper())
-                    j = hm.end()
-                    continue
-                body.append(sql[j : j + 2])
-                j += 2
-                continue
-            if ch == "'":
-                if sql[j + 1 : j + 2] == "'":
-                    body.append("''")
-                    j += 2
-                    continue
-                break
-            body.append(ch)
-            j += 1
-        out.append("'" + "".join(body))
-        if j < n:
-            out.append("'")
-        i = j + 1
-    return "".join(out)
+    return replace_spans(
+        sql, STRING, lambda t: _LITERAL_ESC_RE.sub(_literal_escape, t)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5772,19 +5424,17 @@ def rewrite_like_default_escape(sql: str) -> str:
         m = _LIKE_INFIX_RE.search(sql, pos)
         if m is None:
             return sql
-        if _inside_quotes(sql, m.start()):
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
-        j = m.end()
-        n = len(sql)
-        qm = _LIKE_QUANT_RE.match(sql, j)
+        qm = _LIKE_QUANT_RE.match(sql, m.end())
         if qm is not None:
             # LIKE ANY/ALL (p1, p2, ...): fix each literal item;
             # expression items get the same value-level replace()
             # wrap as the scalar path (a no-op without backslashes)
             open_idx = qm.end() - 1
-            close = _balanced_span(sql, open_idx)
-            items = _split_top_level_commas(sql[open_idx + 1 : close - 1])
+            close = balanced_end(sql, open_idx)
+            items = split_top_level(sql[open_idx + 1 : close - 1], ",")
             fixed = ", ".join(
                 _like_fix_literal(it.strip())
                 if it.strip().startswith("'")
@@ -5797,26 +5447,15 @@ def rewrite_like_default_escape(sql: str) -> str:
             sql = sql[: open_idx + 1] + fixed + sql[close - 1 :]
             pos = open_idx + 1 + len(fixed) + 1
             continue
-        while j < n and sql[j].isspace():
-            j += 1
-        if j >= n:
+        j = _WS.match(sql, m.end()).end()
+        if j >= len(sql):
             return sql
         # pattern operand, including a || chain (binds tighter). A
         # shape the delimiter cannot parse rides through untouched —
         # this pass is an emulation upgrade, never a new refusal (a
         # backslash in such a pattern still dies loudly at runtime).
         try:
-            end = _regexp_operand_end(sql, j)
-            while True:
-                k = end
-                while k < n and sql[k].isspace():
-                    k += 1
-                if sql[k : k + 2] != "||":
-                    break
-                k += 2
-                while k < n and sql[k].isspace():
-                    k += 1
-                end = _regexp_operand_end(sql, k)
+            end = _operand_chain_end(sql, j)
         except ValueError:
             pos = m.end()
             continue
@@ -5869,11 +5508,11 @@ def substitute_where_alias(sql: str, name: str) -> str | None:
     sel = _SELECT_HEAD_RE.match(sql)
     if sel is None:
         return None
-    from_at = _top_level_keyword(sql, "FROM")
+    from_at = find_keyword(sql, "FROM")
     if from_at < 0:
         return None
     expr = None
-    for item in _split_top_level_commas(sql[sel.end(): from_at]):
+    for item in split_top_level(sql[sel.end(): from_at], ","):
         m = re.search(
             r"(?is)^\s*(.*\S)\s+AS\s+" + re.escape(name) + r"\s*$", item
         )
@@ -5882,12 +5521,12 @@ def substitute_where_alias(sql: str, name: str) -> str | None:
             break
     if expr is None:
         return None
-    where_at = _top_level_keyword(sql, "WHERE")
+    where_at = find_keyword(sql, "WHERE")
     if where_at < 0 or where_at < from_at:
         return None
     end = len(sql)
     for kw in _WHERE_STOP_KWS:
-        k = _top_level_keyword(sql, kw, where_at)
+        k = find_keyword(sql, kw, where_at)
         if k >= 0:
             end = min(end, k)
     clause = sql[where_at:end]
@@ -5895,7 +5534,7 @@ def substitute_where_alias(sql: str, name: str) -> str | None:
         r'(?<![\w.$"])' + re.escape(name) + r"(?![\w$])(?!\s*\()",
         re.IGNORECASE,
     )
-    new_clause = _sub_outside_literals(ref, lambda _m: f"({expr})", clause)
+    new_clause = sub_in_code(ref, lambda _m: f"({expr})", clause)
     if new_clause == clause:
         return None
     return sql[:where_at] + new_clause + sql[end:]
@@ -5973,10 +5612,10 @@ def _gs_outer_agg_calls(text: str) -> list[tuple[int, int, str, str]]:
         m = _GS_AGG_RE.search(text, pos)
         if m is None:
             return calls
-        if _inside_quotes(text, m.start()):
+        if not in_code(text, m.start()):
             pos = m.end()
             continue
-        end = _balanced_span(text, m.end() - 1)
+        end = balanced_end(text, m.end() - 1)
         calls.append(
             (m.start(), end, m.group("fn").upper(), text[m.start():end])
         )
@@ -5985,25 +5624,12 @@ def _gs_outer_agg_calls(text: str) -> list[tuple[int, int, str, str]]:
 
 def rewrite_grouping_sets_preagg(sql: str) -> str:
     m = _GS_HEAD_RE.search(sql)
-    if m is None or _inside_quotes(sql, m.start()):
+    if m is None or not in_code(sql, m.start()):
         return sql
     # exactly one grouping-sets clause, at paren depth 0
     if _GS_HEAD_RE.search(sql, m.end()) is not None:
         return sql
-    depth = 0
-    i = 0
-    while i < m.start():
-        ch = sql[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "'" or ch == '"':
-            i += 1
-            while i < m.start() and sql[i] != ch:
-                i += 1
-        i += 1
-    if depth != 0:
+    if paren_depth(sql, m.start()) != 0:
         return sql
     # single plain SELECT statement: no WITH, no set operators
     head = sql[: m.start()]
@@ -6012,25 +5638,14 @@ def rewrite_grouping_sets_preagg(sql: str) -> str:
     if not _SELECT_HEAD_RE.match(head):
         return sql
     for kw in ("UNION", "INTERSECT", "EXCEPT", "MINUS"):
-        if _top_level_keyword(sql, kw) >= 0:
+        if find_keyword(sql, kw) >= 0:
             return sql
     # parse the set list
     sets_open = m.end() - 1
-    sets_close = _balanced_span(sql, sets_open)
+    sets_close = balanced_end(sql, sets_open)
     sets_text = sql[sets_open:sets_close]
     inner = sets_text[1:-1]
-    items: list[str] = []
-    d = 0
-    start = 0
-    for i, ch in enumerate(inner):
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-        elif ch == "," and d == 0:
-            items.append(inner[start:i])
-            start = i + 1
-    items.append(inner[start:])
+    items = split_top_level(inner, ",")
     if len(items) < 2:
         return sql  # a single set is a plain GROUP BY; nothing to win
     keys: list[str] = []
@@ -6049,7 +5664,7 @@ def rewrite_grouping_sets_preagg(sql: str) -> str:
     if not keys:
         return sql
     # split the statement: SELECT <list> FROM <from..where> GROUP BY ...
-    from_at = _top_level_keyword(sql, "FROM")
+    from_at = find_keyword(sql, "FROM")
     if from_at < 0 or from_at > m.start():
         return sql
     sel_list = sql[_SELECT_HEAD_RE.match(head).end(): from_at]
@@ -6087,7 +5702,7 @@ def rewrite_grouping_sets_preagg(sql: str) -> str:
         + _gs_without_spans(tail, tail_calls)
     )
     for fm in re.finditer(r"\b([A-Za-z_]\w*)\s*\(", residue):
-        if _inside_quotes(residue, fm.start()):
+        if not in_code(residue, fm.start()):
             continue
         if fm.group(1).upper() not in _GS_OUTER_ALLOW_FNS:
             return sql
@@ -6185,10 +5800,10 @@ def _object_mutators(sql: str) -> str:
             return sql
         fn = m.group("fn").upper()
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
+        close = balanced_end(sql, open_idx)
         args = [
             a.strip()
-            for a in _split_top_level_commas(sql[open_idx + 1 : close - 1])
+            for a in split_top_level(sql[open_idx + 1 : close - 1], ",")
         ]
         if len(args) < 2:
             raise ValueError(f"{fn} needs an object and at least one key")
@@ -6199,14 +5814,14 @@ def _object_mutators(sql: str) -> str:
             pos = open_idx + 1
             continue
         b_open = args[0].index("(", base.end() - 1)
-        b_close = _balanced_span(args[0], b_open)
+        b_close = balanced_end(args[0], b_open)
         if args[0][b_close:].strip():
             pos = open_idx + 1
             continue
         keep = base.group("fn").upper().endswith("KEEP_NULL")
         inner = args[0][b_open + 1 : b_close - 1].strip()
         raw_pairs = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in split_top_level(inner, ",")]
             if inner
             else []
         )
@@ -6309,18 +5924,18 @@ def rewrite_semi_structured(sql: str) -> str:
         m = head.search(sql, pos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:  # inside a literal
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
+        close = balanced_end(sql, open_idx)
         arg = sql[open_idx + 1 : close - 1].strip()
         wg = _WITHIN_GROUP_RE.match(sql[close:])
         if wg is None:
             pos = close
             continue
         wg_open = close + wg.end() - 1
-        wg_close = _balanced_span(sql, wg_open)
+        wg_close = balanced_end(sql, wg_open)
         ob = _ORDER_BY_BODY_RE.match(sql[wg_open + 1 : wg_close - 1])
         if ob is None:
             raise ValueError("WITHIN GROUP needs (ORDER BY <expr> [ASC|DESC])")
@@ -6361,12 +5976,12 @@ def rewrite_semi_structured(sql: str) -> str:
         m = head.search(sql, oc_pos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:  # inside a literal
+        if not in_code(sql, m.start()):
             oc_pos = m.end()
             continue
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
-        args = [a.strip() for a in _split_top_level_commas(sql[open_idx + 1 : close - 1])]
+        close = balanced_end(sql, open_idx)
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : close - 1], ",")]
         if len(args) == 1 and args[0] == "*":
             raise ValueError("OBJECT_CONSTRUCT(*) needs schema binding; list the keys")
         if len(args) % 2 != 0 or not args:
@@ -6392,8 +6007,8 @@ def rewrite_semi_structured(sql: str) -> str:
         if m is None:
             return sql
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
-        args = [a.strip() for a in _split_top_level_commas(sql[open_idx + 1 : close - 1])]
+        close = balanced_end(sql, open_idx)
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : close - 1], ",")]
         if len(args) != 2:
             raise ValueError("OBJECT_AGG needs (key, value)")
         k, v = args
@@ -6443,12 +6058,12 @@ def rewrite_scalar_funcs(sql: str) -> str:
         # literal-awareness (r13, found by the rewriter property
         # battery): a head INSIDE a string literal is text, not a
         # call — 'DATEDIFF(hour, a, b)' as a VALUE was being rewritten
-        # into its lowering. '' doubling keeps the parity correct.
-        if sql[: m.start()].count("'") % 2 == 1:
+        # into its lowering.
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
+        close = balanced_end(sql, open_idx)
         name = m.group(1).upper()
         if name == "INSERT":
             # ADVICE r11 #5: the scalar INSERT(base, pos, len, repl)
@@ -6476,7 +6091,7 @@ def rewrite_scalar_funcs(sql: str) -> str:
                 pos = close
                 continue
         inner = rewrite_scalar_funcs(sql[open_idx + 1 : close - 1])
-        args = [a.strip() for a in _split_top_level_commas(inner)]
+        args = [a.strip() for a in split_top_level(inner, ",")]
         repl = fns[name](args)
         sql = sql[: m.start()] + repl + sql[close:]
         pos = m.start() + len(repl)
@@ -6515,7 +6130,7 @@ def rewrite_interval_commas(sql: str) -> str:
         m = _INTERVAL_COMMA_RE.search(sql, pos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         r = repl(m)
@@ -6529,7 +6144,7 @@ def rewrite_interval_commas(sql: str) -> str:
         m = _INTERVAL_BARE_COMMA_RE.search(sql, bpos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:
+        if not in_code(sql, m.start()):
             bpos = m.end()
             continue
         raise ValueError(
@@ -6572,7 +6187,7 @@ def rewrite_star_modifiers(sql: str) -> str:
         m = _STAR_EXCLUDE_RE.search(sql, pos)
         if m is None:
             break
-        if sql[: m.start()].count("'") % 2 == 1:
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         cols = m.group("plist") if m.group("plist") is not None else m.group("pcol")
@@ -6587,7 +6202,7 @@ def rewrite_star_modifiers(sql: str) -> str:
         cand = _STAR_REFUSE_RE.search(sql, rpos)
         if cand is None:
             break
-        if sql[: cand.start()].count("'") % 2 == 1:
+        if not in_code(sql, cand.start()):
             rpos = cand.end()
             continue
         m = cand
@@ -6714,7 +6329,7 @@ def rewrite_cast_types(sql: str) -> str:
         m = _DCOLON_TYPE_RE.search(sql, pos)
         if m is None:
             break
-        if _inside_quotes(sql, m.start()):
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         base = m.group("base").upper()
@@ -6740,35 +6355,17 @@ def rewrite_cast_types(sql: str) -> str:
         m = _CAST_HEAD_RE.search(sql, pos)
         if m is None:
             return sql
-        if sql[: m.start()].count("'") % 2 == 1:
+        if not in_code(sql, m.start()):
             pos = m.end()
             continue
         open_idx = sql.index("(", m.end() - 1)
-        close = _balanced_span(sql, open_idx)
+        close = balanced_end(sql, open_idx)
         inner = sql[open_idx + 1 : close - 1]
-        # last top-level ' AS ' (depth-0, outside strings) splits the
-        # operand from the type text
-        # depth / string state per character, then the LAST depth-0
-        # '\sAS\s' outside strings splits operand from type text
-        depth = 0
-        in_str = False
-        state = []
-        for ch in inner:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-            state.append((depth, in_str))
-        as_at = -1
-        as_start = -1
+        # the LAST depth-0 code '\sAS\s' splits operand from type text
+        as_start = as_at = -1
         for am in re.finditer(r"\sAS\s", inner, re.IGNORECASE):
-            d, s = state[am.start()]
-            if d == 0 and not s:
-                as_at = am.end()
-                as_start = am.start()
+            if in_code(inner, am.start() + 1) and paren_depth(inner, am.start()) == 0:
+                as_start, as_at = am.start(), am.end()
         if as_at < 0:
             pos = open_idx + 1  # malformed/no AS: let Spark complain
             continue
@@ -6805,10 +6402,13 @@ def rewrite_cast_types(sql: str) -> str:
 # Snowflake VARIANT path access (col:path.sub[0]::type)
 # ---------------------------------------------------------------------------
 
+# a "quoted" segment holding a single quote never matches: ['it's'] is
+# no parseable JSON path, so such a path is left for Spark's parser to
+# reject rather than lowered to a get_json_object that NULLs silently
 _VARIANT_PATH_RE = re.compile(
     r"(?P<base>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*(?<!:):(?!:)\s*"
-    r'(?P<path>(?:[A-Za-z_]\w*|"[^"]+")'
-    r'(?:\.(?:[A-Za-z_]\w*|"[^"]+")|\[\d+\])*)'
+    r'(?P<path>(?:[A-Za-z_]\w*|"[^"\']+")'
+    r'(?:\.(?:[A-Za-z_]\w*|"[^"\']+")|\[\d+\])*)'
 )
 _VARIANT_SEG_RE = re.compile(r'[A-Za-z_]\w*|"[^"]+"|\[\d+\]')
 
@@ -6832,23 +6432,7 @@ def rewrite_variant_path(sql: str) -> str:
     rewrites), and ``::`` casts are explicitly not path separators.
     Pure expression rewriting: pushdown/pruning unaffected at any
     scale."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    span_start = 0
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            out.append(_VARIANT_PATH_RE.sub(_variant_repl, sql[span_start:i]))
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            span_start = i
-        else:
-            i += 1
-    out.append(_VARIANT_PATH_RE.sub(_variant_repl, sql[span_start:]))
-    return "".join(out)
+    return sub_in_code(_VARIANT_PATH_RE, _variant_repl, sql)
 
 
 def _variant_repl(m: "re.Match[str]") -> str:
@@ -6907,8 +6491,8 @@ def rewrite_split_to_table(sql: str) -> str:
         m = _SPLIT_TO_TABLE_RE.search(out)
         if m is None:
             return out
-        close = _balanced_span(out, m.end() - 1)
-        args = _split_top_level_commas(out[m.end() : close - 1])
+        close = balanced_end(out, m.end() - 1)
+        args = split_top_level(out[m.end() : close - 1], ",")
         if len(args) != 2:
             raise ValueError("SPLIT_TO_TABLE takes (string, delimiter)")
         expr, delim = args[0].strip(), args[1].strip()
@@ -6965,13 +6549,13 @@ def rewrite_split_to_table(sql: str) -> str:
 def _append_where(sql: str, pred: str) -> str:
     """AND ``pred`` into the statement's top-level WHERE (or add one
     before a trailing GROUP/ORDER/LIMIT, else at the end)."""
-    w = _top_level_keyword(sql, "WHERE")
+    w = find_keyword(sql, "WHERE")
     if w >= 0:
         insert_at = w + len("WHERE")
         return sql[:insert_at] + f" ({pred}) AND" + sql[insert_at:]
     cut = len(sql)
     for kw in ("GROUP", "ORDER", "LIMIT", "HAVING"):
-        k = _top_level_keyword(sql, kw)
+        k = find_keyword(sql, kw)
         if 0 <= k < cut:
             cut = k
     return sql[:cut] + f" WHERE {pred} " + sql[cut:]
@@ -7189,14 +6773,14 @@ def parse_match_recognize(text: str) -> dict:
     <symbol> (resume at the symbol's run — the run-aligned contract;
     the symbol must be an unconditional leg of every variant, and a
     first-leg resume refuses as ANSI's infinite-loop error)."""
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     hm = _MR_HEAD.search(sql)
     if hm is None:
         raise ValueError(
             "unsupported MATCH_RECOGNIZE shape (need SELECT * FROM <t>"
             " MATCH_RECOGNIZE (...))"
         )
-    close = _balanced_span(sql, hm.end() - 1)
+    close = balanced_end(sql, hm.end() - 1)
     if sql[close:].strip():
         raise ValueError("trailing clauses after MATCH_RECOGNIZE are unsupported")
     body = sql[hm.end() : close - 1].strip()
@@ -7210,7 +6794,7 @@ def parse_match_recognize(text: str) -> dict:
     order = [c.strip() for c in bm.group("order").split(",")]
     define: dict[str, int] = {}
     def_col: str | None = None
-    for d in _split_top_level_commas(bm.group("define")):
+    for d in split_top_level(bm.group("define"), ","):
         dm = _MR_DEFINE.match(d.strip())
         if dm is None:
             raise ValueError(
@@ -7232,7 +6816,7 @@ def parse_match_recognize(text: str) -> dict:
         pattern = [alts[0] for alts in variants[0]]
     all_rows = "ALL" in bm.group("permatch").upper().split()[0]
     measures = []
-    for item in _split_top_level_commas(bm.group("measures")):
+    for item in split_top_level(bm.group("measures"), ","):
         mm = _MR_MEASURE.match(item.strip())
         if mm is None:
             raise ValueError(f"unsupported MEASURES item: {item.strip()!r}")
@@ -8070,40 +7654,9 @@ def rewrite_collate(sql: str) -> str:
                 name += "_AI"
         return f"COLLATE {name}"
 
-    # literal-aware scan: the word COLLATE inside a '...' string must
-    # never rewrite (the spec operand itself is matched WITH its
-    # quotes by the regex, so scanning code spans only is safe)
-    out: list[str] = []
-    i, n = 0, len(sql)
-    span = 0
-    while i < n:
-        if sql[i] == "'":
-            out.append(_COLLATE_RE.sub(repl, sql[span:i]))
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and sql[j + 1 : j + 2] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    break
-                else:
-                    j += 1
-            # include the literal verbatim — UNLESS it is the operand
-            # of a COLLATE immediately before it (the regex needs to
-            # see keyword + operand together, so splice them)
-            tail_code = out[-1]
-            if re.search(r"COLLATE\s*$", tail_code, re.IGNORECASE):
-                merged = _COLLATE_RE.sub(
-                    repl, tail_code + sql[i : j + 1]
-                )
-                out[-1] = merged
-            else:
-                out.append(sql[i : j + 1])
-            i = j + 1
-            span = i
-        else:
-            i += 1
-    out.append(_COLLATE_RE.sub(repl, sql[span:]))
-    return "".join(out)
+    # the spec operand is matched WITH its quotes, so only the keyword
+    # has to be code: COLLATE inside quoted text never rewrites
+    return sub_in_code(_COLLATE_RE, repl, sql)
 
 
 def lower_select(sql: str) -> str:
@@ -8120,6 +7673,12 @@ def lower_select(sql: str) -> str:
     statement executors (MATCH_RECOGNIZE, recursive FLATTEN, ASOF,
     MERGE/INSERT OVERWRITE, time travel) stay separate because they
     bind engine objects, not text."""
+    # an unterminated '...' literal swallows the rest of the text:
+    # refuse it before any pass rewrites what follows it
+    lx = lex(sql)
+    if lx.unclosed == STRING:
+        start = lx.spans[-1][0]
+        raise ValueError(f"unterminated string literal at {sql[start:start+30]!r}")
     # FIRST: lower raw $$...$$ strings to ordinary literals, then
     # converge the two divergent literal escape spellings (\f, \xhh)
     # so every later literal-aware pass sees final text.

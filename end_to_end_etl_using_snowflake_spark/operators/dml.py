@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.tables import parquet_files
+
 
 def update_where(
     df: DataFrame, predicate: Column, assignments: Mapping[str, Column]
@@ -93,8 +95,19 @@ def local_frame(spark: SparkSession, rows: Sequence, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     names = [f.name for f in schema.fields]
+
+    def record(i: int, r) -> dict:
+        # zip() would silently truncate a long row and null-fill a short one
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_frame: row {i} has {len(r)} values for"
+                f" {len(names)} columns {names}"
+            )
+        return dict(zip(names, r))
+
     tbl = pa.Table.from_pylist(
-        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+        [record(i, r) for i, r in enumerate(rows)],
+        schema=to_arrow_schema(schema),
     )
     return spark.createDataFrame(tbl, schema=schema)
 
@@ -270,10 +283,7 @@ class ParquetTable:
         os.rename(dropped, self.path)
 
     def file_count(self) -> int:
-        n = 0
-        for _, _, files in os.walk(self.path):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+        return len(parquet_files(self.path))
 
     def column_max(self, col: str):
         """Exact column maximum from the parquet FOOTER statistics —
@@ -288,23 +298,20 @@ class ParquetTable:
         if not self.exists():
             return None
         best = None
-        for root, _dirs, files in os.walk(self.path):
-            for f in files:
-                if not f.endswith(".parquet"):
+        for f in parquet_files(self.path):
+            md = pq.ParquetFile(f).metadata
+            try:
+                idx = md.schema.names.index(col)
+            except ValueError:
+                return None
+            for rg in range(md.num_row_groups):
+                c = md.row_group(rg).column(idx)
+                st = c.statistics
+                if c.num_values == 0:
                     continue
-                md = pq.ParquetFile(os.path.join(root, f)).metadata
-                try:
-                    idx = md.schema.names.index(col)
-                except ValueError:
+                if st is None or not st.has_min_max:
                     return None
-                for rg in range(md.num_row_groups):
-                    c = md.row_group(rg).column(idx)
-                    st = c.statistics
-                    if c.num_values == 0:
-                        continue
-                    if st is None or not st.has_min_max:
-                        return None
-                    best = st.max if best is None else max(best, st.max)
+                best = st.max if best is None else max(best, st.max)
         return best
 
     def compact(self, max_files: int = 1) -> bool:

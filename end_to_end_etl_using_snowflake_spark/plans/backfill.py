@@ -234,14 +234,14 @@ def _audit(pipelines) -> DataFrame:
     footer reader the r16 stream gates use), so the audit launches no
     table scan at all: one aggregate over the fact rows (cached when
     the rebuild just produced them) plus three metadata literals."""
-    from ..streaming.changelog import _count_parquet_rows
+    from .tables import parquet_row_count
 
     fact = pipelines._fact_post_state
     if fact is None:
         fact = pipelines.fact_order.read()
 
     def _rows(table) -> int:
-        return _count_parquet_rows(table.storage.path) if table.storage.exists() else 0
+        return parquet_row_count(table.storage.path) if table.storage.exists() else 0
 
     audit = fact.agg(
         F.count(F.lit(1)).alias("n_fact_rows"),

@@ -319,7 +319,7 @@ def d5l_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebalance_scan(load(spark, sf_dir, "embeddings"), spark),
         "vec_id", "embedding",
         threshold=0.5, bands=4, dims=64,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 
@@ -353,7 +353,7 @@ def d14_dedup_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.embedding_cosine_pairs_lsh_adaptive(
         load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         threshold=0.5, bands=4, dims=64, cap_factor=4,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 
@@ -1129,7 +1129,7 @@ def v16_ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.hyperplane_lsh_topk_adaptive(
         emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding",
         k=5, dims=64, multiprobe=True,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 

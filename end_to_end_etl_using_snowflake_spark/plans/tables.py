@@ -10,6 +10,8 @@ partitioned/bucketed external tables, but the call sites are identical.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,32 +52,49 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def parquet_row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of a source table from its parquet FOOTERS —
-    O(files) driver-side metadata, no Spark job (the Snowflake
-    COUNT(*)-from-micro-partition-metadata semantic, and the same
-    footer reader the stream gates / identity seed use, r16/r17).
+def _hidden(name: str) -> bool:
+    # Spark's file-index visibility rule: ``.``-names and ``_``-names
+    # (``_SUCCESS``, ``_temporary``, staging output) are not data,
+    # except ``_col=value`` partition directories
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
-    Feeds the adaptive-LSH geometry derivation (d5l/d14/v16), whose
-    docstrings always said "table stats at 100 TB": the corpus count
-    only sizes the banding key space, so reading it from metadata
-    removes one full-corpus Spark scan per invocation while producing
-    the exact same integer as ``df.count()`` on these append-only
-    sources.
+
+def parquet_files(path: str) -> list[str]:
+    """The parquet files a Spark scan of ``path`` (one file, or a table
+    directory tree) reads: hidden files and directories are skipped."""
+    if os.path.isfile(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not _hidden(f)
+        ]
+    return out
+
+
+def parquet_row_count(path: str) -> int:
+    """Exact row count of the parquet file or table directory at
+    ``path`` from its FOOTERS — O(files) driver-side metadata, no
+    Spark job (the Snowflake COUNT(*)-from-micro-partition-metadata
+    semantic). Equal to ``spark.read.parquet(path).count()``.
+
+    Feeds the adaptive-LSH geometry derivation (d5l/d14/v16), the
+    stream_has_data metadata gate and the audit's side counts.
     """
-    import os
-
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        n = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return n
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(path))
+
+
+def is_undersplit(df: DataFrame) -> bool:
+    """True when the scan of ``df`` has fewer partitions than the
+    cluster's parallelism (few row groups / files): the downstream
+    work would run on a handful of tasks. False on a well-split
+    100 TB layout."""
+    return df.rdd.getNumPartitions() < df.sparkSession.sparkContext.defaultParallelism
 
 
 def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -96,7 +115,7 @@ def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     pipelines; for cheap scans the exchange costs more than it buys
     (measured: +4 s total when applied to every load).
     """
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+    if is_undersplit(df):
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

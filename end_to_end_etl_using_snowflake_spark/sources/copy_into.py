@@ -16,11 +16,18 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..functions.sqllex import (
+    balanced_end,
+    split_top_level,
+    strip_line_comments,
+    sub_in_code,
+)
 from .csv_format import CSV_OPTIONS
 
 
@@ -141,8 +148,6 @@ def stage_select(
     over the matched files with the filename column coming from the
     scan (input_file_name — no join; the one optional shuffle is
     documented above)."""
-    import re
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -232,37 +237,19 @@ def stage_select(
     # Snowflake's POSITIONAL stage columns — `SELECT $1, $2::int FROM
     # @stage` (r9, the raw-COPY preview idiom): $n resolves to the
     # named format's n-th schema column, 1-based; out-of-range refuses.
-    # Literal-aware scan so a '$2' inside a string constant survives.
+    # Literal-aware so a '$2' inside a string constant survives.
     ncols = len(schema.fields)
 
-    def _positional(segment: str) -> str:
-        def sub(mo: "re.Match[str]") -> str:
-            i = int(mo.group(1))
-            if not (1 <= i <= ncols):
-                raise ValueError(
-                    f"positional column ${i} out of range (format has"
-                    f" {ncols} columns)"
-                )
-            return f"`{schema.fields[i - 1].name}`"
+    def positional(mo: "re.Match[str]") -> str:
+        i = int(mo.group(1))
+        if not (1 <= i <= ncols):
+            raise ValueError(
+                f"positional column ${i} out of range (format has"
+                f" {ncols} columns)"
+            )
+        return f"`{schema.fields[i - 1].name}`"
 
-        return re.sub(r"\$(\d+)", sub, segment)
-
-    out: list[str] = []
-    i = 0
-    span = 0
-    while i < len(clean):
-        if clean[i] == "'":
-            out.append(_positional(clean[span:i]))
-            j = i + 1
-            while j < len(clean) and clean[j] != "'":
-                j += 1
-            out.append(clean[i : j + 1])
-            i = j + 1
-            span = i
-        else:
-            i += 1
-    out.append(_positional(clean[span:]))
-    return spark.sql("".join(out))
+    return spark.sql(sub_in_code(_POSITIONAL_REF, positional, clean))
 
 
 def parse_copy_unload(text: str) -> dict:
@@ -275,11 +262,7 @@ def parse_copy_unload(text: str) -> dict:
     downstream consumers). Only TYPE='CSV' formats are accepted (the
     engine's stage format); subqueries parse with balanced parens so
     nested SELECTs pass through verbatim."""
-    import re
-
-    from ..functions.sqldialect import _balanced_span, _strip_line_comments
-
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.match(
         r"COPY\s+INTO\s+@(?P<stage>[\w./]+)\s+FROM\s*\(", sql, re.IGNORECASE
     )
@@ -289,7 +272,7 @@ def parse_copy_unload(text: str) -> dict:
             " (<query>) FILE_FORMAT = (...))"
         )
     open_idx = sql.index("(", m.end() - 1)
-    close = _balanced_span(sql, open_idx)
+    close = balanced_end(sql, open_idx)
     query = sql[open_idx + 1 : close - 1].strip()
     tail = sql[close:]
     fm = re.search(r"FILE_FORMAT\s*=\s*\(([^)]*)\)", tail, re.IGNORECASE)
@@ -352,11 +335,8 @@ def put_statement(text: str, stage_root: str) -> dict:
     listing; the data path stays distributed (Spark reads .csv.gz
     natively)."""
     import gzip
-    import re
 
-    from ..functions.sqldialect import _strip_line_comments
-
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.match(
         r"PUT\s+file://(?P<src>\S+)\s+@(?P<stage>[\w./]+)(?P<tail>.*)$",
         sql,
@@ -411,11 +391,7 @@ def remove_statement(text: str, stage_root: str) -> list[str]:
     file). Prefix semantics match Snowflake's: ``REMOVE @s/dir`` clears
     the subtree, ``REMOVE @s/file.csv`` one file. Listing + unlink only
     — never touches file contents."""
-    import re
-
-    from ..functions.sqldialect import _strip_line_comments
-
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.match(r"REMOVE\s+@(?P<stage>[\w./]+)\s*$", sql, re.IGNORECASE)
     if m is None:
         raise ValueError("unsupported REMOVE shape (need REMOVE @<stage>[/prefix])")
@@ -450,12 +426,9 @@ def get_statement(text: str, stage_root: str) -> list[dict]:
     that prefix-relative subpath) — anti-collision beats flat-parity
     here. ``GET @stage/a file://d`` lands ``a/x.csv`` at ``d/x.csv``
     exactly like Snowflake; only nested files gain subdirectories."""
-    import re
     import shutil
 
-    from ..functions.sqldialect import _strip_line_comments
-
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.match(
         r"GET\s+@(?P<stage>[\w./]+)\s+file://(?P<dst>\S+)\s*$",
         sql,
@@ -515,8 +488,6 @@ def _decode_sf_escapes(s: str) -> str:
     """Decode the escape forms Snowflake format options use in
     delimiter/quote values: ``\\t``/``\\n``/``\\r``/``\\\\`` and
     3-digit octal (``\\042`` = ``"``), plus ``0x``-hex (``0x27``)."""
-    import re
-
     if re.fullmatch(r"0[xX][0-9a-fA-F]{2}", s):
         return chr(int(s[2:], 16))
 
@@ -529,22 +500,13 @@ def _decode_sf_escapes(s: str) -> str:
     return re.sub(r"\\([0-7]{3}|[tnr\\])", sub, s)
 
 
+_POSITIONAL_REF = re.compile(r"\$(\d+)")
+
+
 def _split_top_level(s: str) -> list[str]:
     """Split a FILE_FORMAT body on commas outside quotes/parens, so
     list-valued options (``NULL_IF = ('\\\\N', '')``) survive."""
-    parts, depth, quote, start = [], 0, False, 0
-    for i, ch in enumerate(s):
-        if ch == "'":
-            quote = not quote
-        elif not quote and ch == "(":
-            depth += 1
-        elif not quote and ch == ")":
-            depth -= 1
-        elif not quote and depth == 0 and ch == ",":
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts if p.strip()]
+    return [p.strip() for p in split_top_level(s, ",") if p.strip()]
 
 
 def translate_csv_format_options(fmt: dict[str, str]) -> dict[str, str]:
@@ -659,11 +621,7 @@ def parse_copy_statement(text: str) -> dict:
     into a spec dict. Unsupported clauses refuse loudly (MATCH_BY
     COLUMN_NAME, transformations-in-FROM go through the stage_select /
     pipeline surfaces instead)."""
-    import re
-
-    from ..functions.sqldialect import _strip_line_comments
-
-    sql = _strip_line_comments(text).strip().rstrip(";")
+    sql = strip_line_comments(text).strip().rstrip(";")
     m = re.match(
         r"COPY\s+INTO\s+(?P<table>[A-Za-z_][\w.]*)\s+FROM\s+"
         r"@(?P<stage>[\w./]+)\s*(?P<tail>.*)$",

@@ -33,22 +33,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.tables import parquet_files, parquet_row_count
+
 ACTION_COL = "_action"
 VERSION_COL = "_version"
-
-
-def _count_parquet_rows(root: str) -> int:
-    """Exact row count of a just-written version directory from the
-    parquet FOOTERS — O(files) driver-side metadata reads, no Spark
-    job. Powers the stream_has_data metadata fast path (r16)."""
-    import pyarrow.parquet as pq
-
-    n = 0
-    for r, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(r, f)).metadata.num_rows
-    return n
 
 
 class Changelog:
@@ -108,7 +96,7 @@ class Changelog:
             .parquet(self.log_path)
         )
         meta["version"] = new_version
-        meta.setdefault("rows", {})[str(new_version)] = _count_parquet_rows(
+        meta.setdefault("rows", {})[str(new_version)] = parquet_row_count(
             os.path.join(self.log_path, f"{VERSION_COL}={new_version}")
         )
         if at is not None:
@@ -136,16 +124,13 @@ class Changelog:
             f"{ACTION_COL}={action}",
         )
         os.makedirs(dst, exist_ok=True)
-        rows = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                target = os.path.join(dst, f)
-                if os.path.exists(target):  # paranoid: part names are unique
-                    target = os.path.join(dst, f"v{new_version}-{f}")
-                os.link(os.path.join(root, f), target)
-        rows = _count_parquet_rows(dst)
+        for src in parquet_files(src_dir):
+            f = os.path.basename(src)
+            target = os.path.join(dst, f)
+            if os.path.exists(target):  # paranoid: part names are unique
+                target = os.path.join(dst, f"v{new_version}-{f}")
+            os.link(src, target)
+        rows = parquet_row_count(dst)
         meta["version"] = new_version
         meta.setdefault("rows", {})[str(new_version)] = rows
         if at is not None:

@@ -4337,8 +4337,10 @@ def test_transaction_script_edges(spark):
     import pytest as _pytest
 
     from end_to_end_etl_using_snowflake_spark.functions.sqldialect import (
-        _split_statements,
         transaction_script,
+    )
+    from end_to_end_etl_using_snowflake_spark.functions.sqllex import (
+        split_statements,
     )
 
     t = spark.createDataFrame([(1, 10), (2, 20)], "id int, v int")
@@ -4370,10 +4372,16 @@ def test_transaction_script_edges(spark):
     with _pytest.raises(ValueError, match="COMMIT outside"):
         transaction_script(spark, "COMMIT", {"t": t})
     # splitter: ';' inside literals and comments never splits
-    parts = _split_statements(
+    parts = split_statements(
         "UPDATE t SET s = 'a;b'; -- c;d\nDELETE FROM t /* x;y */ WHERE v < 9"
     )
     assert len(parts) == 2 and "'a;b'" in parts[0]
+    # ... nor inside "..." identifiers or $$...$$ strings (the
+    # transaction runner and the console-script runner share the splitter)
+    assert split_statements('UPDATE "a;b" SET v = 1') == ['UPDATE "a;b" SET v = 1']
+    assert split_statements("SELECT $$a;b$$; SELECT 1") == [
+        "SELECT $$a;b$$", "SELECT 1",
+    ]
 
 
 def test_snowflake_sql_dispatches_put_remove(spark, tmp_path):
@@ -6583,6 +6591,45 @@ def test_dialect_advice_r15_fixes(spark):
     # bearing quoted identifier still lowers (VARCHAR -> STRING)
     out = rewrite_cast_types('SELECT "o\'k"::VARCHAR AS s FROM t')
     assert "::STRING" in out, out
+
+
+def test_dialect_lexer_desyncs():
+    """One lexer answers "is this position code?" for every dialect
+    pass: a quote kind, comment or $$ string inside another can no
+    longer desync one helper from the rest."""
+    from end_to_end_etl_using_snowflake_spark.functions.sqldialect import (
+        lower_select,
+    )
+    from end_to_end_etl_using_snowflake_spark.functions.sqllex import (
+        balanced_end,
+        strip_line_comments,
+    )
+
+    # '--' inside a "..." identifier is not a comment
+    assert strip_line_comments('SELECT "a--b" FROM t') == 'SELECT "a--b" FROM t'
+    # ')' inside a "..." identifier does not close the call
+    assert balanced_end('f("a)b", 1) x', 1) == 11
+    # an apostrophe inside a comment does not open a literal
+    assert lower_select("SELECT c -- don't\n , x::NUMBER(4,1) AS n FROM t") == (
+        "SELECT c -- don't\n , x::DECIMAL(4,1) AS n FROM t"
+    )
+    # ... nor inside a "..." identifier
+    assert lower_select('SELECT "it\'s" AS a, col:k.v AS b FROM t') == (
+        'SELECT "it\'s" AS a, get_json_object(col, \'$.k.v\') AS b FROM t'
+    )
+
+
+def test_local_frame_rejects_row_arity_mismatch(spark):
+    """A row with fewer or more values than the schema has columns is
+    a caller bug: refuse it instead of null-filling or truncating."""
+    from end_to_end_etl_using_snowflake_spark.operators.dml import local_frame
+
+    schema = "a string, b long"
+    assert local_frame(spark, [("x", 1)], schema).collect()[0].b == 1
+    with pytest.raises(ValueError, match="row 1 has 1 values for 2 columns"):
+        local_frame(spark, [("x", 1), ("y",)], schema)
+    with pytest.raises(ValueError, match="row 0 has 3 values for 2 columns"):
+        local_frame(spark, [("x", 1, 2)], schema)
 
 
 def test_empty_frame_scans_without_python_tasks(spark):

@@ -1,13 +1,17 @@
 """Property-based invariants of the text-rewrite stack
 (functions/sqldialect.py:lower_select and its passes), r13.
 
-The stack is a dozen literal-aware scans; the property that keeps the
-whole approach safe is: STRING LITERALS ARE INVIOLATE. Hypothesis
-generates literal contents full of rewrite-trigger text (function
-heads, '::NUMBER', '* EXCLUDE', 'RLIKE', comma intervals, regex
-metacharacters, embedded '' quotes) and splices them into queries;
-every pass composition must carry the literal through byte-identical
-and never raise anything but the documented ValueError refusals.
+Every pass asks one lexer (functions/sqllex.py) which positions are
+code: '...' string literals, "..." quoted identifiers, $$...$$
+strings and -- / /* */ comments are classified once, and no pass
+rewrites inside them. The property that keeps the whole approach
+safe is: QUOTED TEXT AND COMMENTS ARE INVIOLATE. Hypothesis
+generates bodies full of rewrite-trigger text (function heads,
+'::NUMBER', '* EXCLUDE', 'RLIKE', comma intervals, regex
+metacharacters, embedded quotes of the other kinds) and splices them
+into queries; every pass composition must carry them through
+byte-identical, rewrite the trigger text that follows them, and
+never raise anything but the documented ValueError refusals.
 
 r15 carves out exactly two DOCUMENTED exceptions (see the r15 block
 at the bottom): Snowflake's form-feed and hex-pair literal escapes
@@ -68,10 +72,9 @@ def test_string_literals_survive_lowering(a, b):
 @settings(max_examples=100, deadline=None)
 @given(_LITERAL_BODY)
 def test_doubled_quotes_keep_parity(body):
-    # an embedded quote is written '' — the literal-awareness of every
-    # pass is parity-based, so the doubled form must not flip state
-    # and let a trigger word AFTER the literal go un-rewritten (or a
-    # trigger INSIDE it get rewritten)
+    # an embedded quote is written '' — the doubled form must not end
+    # the literal and let a trigger word AFTER the literal go
+    # un-rewritten (or a trigger INSIDE it get rewritten)
     sql = f"SELECT 'pre''{body}''post' AS x, x::NUMBER(4,1) AS n FROM t"
     try:
         out = lower_select(sql)
@@ -79,6 +82,33 @@ def test_doubled_quotes_keep_parity(body):
         return
     assert f"'pre''{body}''post'" in out, out
     assert "::DECIMAL(4,1)" in out, out  # the real cast DID rewrite
+
+
+# bodies for "..." identifiers and comments: trigger text plus bare
+# apostrophes, which must not open a literal there
+_QUOTED_BODY = st.lists(
+    st.one_of(_TRIGGER_WORDS, _FILLER, st.sampled_from(["'", "don't", "''"])),
+    min_size=0,
+    max_size=4,
+).map("".join)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_QUOTED_BODY, _QUOTED_BODY, _QUOTED_BODY)
+def test_identifiers_and_comments_survive_lowering(a, b, c):
+    ident = f'"{a}"'
+    line = f"-- {b}\n"
+    block = "/* " + c.replace("*/", "* /") + " */"
+    sql = (
+        f"SELECT {ident} AS i, x::NUMBER(4,1) AS n {line}"
+        f" , y::NUMBER(4,1) AS m {block} , z::NUMBER(4,1) AS k FROM t"
+    )
+    out = lower_select(sql)
+    for body in (ident, line, block):
+        assert body in out, (sql, out)
+    # the trigger text after each of them still rewrites
+    for col in ("x", "y", "z"):
+        assert f"{col}::DECIMAL(4,1)" in out, (sql, out)
 
 
 # NOTE deliberately absent: full lower_select idempotence is NOT a

@@ -781,7 +781,7 @@ def test_parquet_row_count_matches_spark_count(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     emb = load(spark, sf_dir, "embeddings")
-    n_footer = parquet_row_count(sf_dir, "embeddings")
+    n_footer = parquet_row_count(f"{sf_dir}/embeddings.parquet")
     assert n_footer == emb.count()
 
     def pairs(n_rows):
@@ -794,3 +794,35 @@ def test_parquet_row_count_matches_spark_count(spark):
         )
 
     assert pairs(n_footer) == pairs(None)
+
+
+def test_footer_metadata_skips_hidden_files(spark, tmp_path):
+    """Footer counts, file counts and column maxima follow Spark's
+    visibility rule: a ``_``/``.``-named file or directory (in-flight
+    temp output, a staging directory) is not table data, so a decoy in
+    either place must not change the footer answer."""
+    import os
+    import shutil
+
+    from end_to_end_etl_using_snowflake_spark.plans.tables import (
+        parquet_row_count,
+    )
+
+    path = str(tmp_path / "t")
+    spark.range(10).repartition(2).write.parquet(path)
+    part = next(f for f in os.listdir(path) if f.endswith(".parquet"))
+    decoy = str(tmp_path / "decoy.parquet")
+    spark.range(100, 140).coalesce(1).write.parquet(decoy)
+    decoy_file = next(
+        os.path.join(decoy, f) for f in os.listdir(decoy) if f.endswith(".parquet")
+    )
+    shutil.copy(decoy_file, os.path.join(path, "_tmp.parquet"))
+    os.makedirs(os.path.join(path, ".spark-staging-x"))
+    shutil.copy(decoy_file, os.path.join(path, ".spark-staging-x", "part.parquet"))
+
+    df = spark.read.parquet(path)
+    assert parquet_row_count(path) == df.count() == 10
+    table = ParquetTable(spark, path)
+    assert table.file_count() == len(df.inputFiles()) == 2
+    assert part in " ".join(df.inputFiles())
+    assert table.column_max("id") == df.agg({"id": "max"}).first()[0] == 9
