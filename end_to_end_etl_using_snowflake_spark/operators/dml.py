@@ -201,6 +201,40 @@ class ParquetTable:
         if os.path.exists(old):
             shutil.rmtree(old, ignore_errors=True)
 
+    def swap_partitions(self, tmp: str) -> None:
+        """The commit half of a dynamic partition overwrite: move each
+        partition directory of ``tmp`` (a partitioned ``write_tmp``
+        output) into the table, replacing the directory of the same
+        ``key=value`` path. Partitions absent from ``tmp`` are
+        untouched. Per partition this is the discipline of Spark's
+        dynamic-overwrite commit (old directory out, new directory in;
+        the set of partitions is not swapped atomically), without
+        Spark's copy out of a staging directory. The displaced
+        directories go to a sibling of the table, never inside it, so
+        no reader lists them. ``tmp`` is removed last, and a failure to
+        remove it raises: its presence is what tells the changelog the
+        swap did not finish (``Changelog.record_linked``)."""
+        if not self.partition_by:
+            raise ValueError("swap_partitions requires partition_by")
+        rels = [""]
+        for _ in self.partition_by:
+            rels = [
+                os.path.join(rel, d)
+                for rel in rels
+                for d in sorted(os.listdir(os.path.join(tmp, rel)))
+                if "=" in d and os.path.isdir(os.path.join(tmp, rel, d))
+            ]
+        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
+        for rel in rels:
+            dst = os.path.join(self.path, rel)
+            if os.path.exists(dst):
+                os.makedirs(os.path.dirname(os.path.join(old, rel)), exist_ok=True)
+                os.rename(dst, os.path.join(old, rel))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.rename(os.path.join(tmp, rel), dst)
+        shutil.rmtree(tmp)
+        shutil.rmtree(old, ignore_errors=True)
+
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Dynamic partition overwrite: replace only the partitions
         present in ``df`` (the 100 TB-friendly fact maintenance path)."""

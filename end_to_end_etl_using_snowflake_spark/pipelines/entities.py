@@ -334,8 +334,14 @@ class EntityPipelines:
                 order_by=["customer_id"],
                 # initial load: every key is NULL by construction — skip
                 # fill_identity's max() pass (one fewer job per cycle)
-                # and its isNull/isNotNull split + union (r17, all_new)
-                existing_max=0 if target_empty else None,
+                # and its isNull/isNotNull split + union (r17, all_new).
+                # Otherwise seed from the dim's footers (the merge keeps
+                # every target key, so its max is the table's): no max()
+                # aggregate in the plan; None (the in-plan seed) when a
+                # row group lacks stats
+                existing_max=0
+                if target_empty
+                else self.dim_customer.storage.column_max("customer_dim_key"),
                 all_new=target_empty,
             )
             self.dim_customer.overwrite(
@@ -386,7 +392,9 @@ class EntityPipelines:
                 merged,
                 "item_dim_key",
                 order_by=["item_id"],
-                existing_max=0 if target_empty else None,
+                existing_max=0
+                if target_empty
+                else self.dim_item.storage.column_max("item_dim_key"),
                 all_new=target_empty,
             )
             self.dim_item.overwrite(out.select(*self.dim_item.schema.names), changes=typed)
@@ -419,7 +427,6 @@ class EntityPipelines:
             self._fact_post_state.unpersist()
             self._fact_post_state = None
         src, version = raw.changelog.stream_read("fact_tsk")
-        ro = raw.read()
         incremental = self.fact_mode == "incremental"
         if incremental:
             if src is None:
@@ -438,7 +445,12 @@ class EntityPipelines:
                 .distinct()
                 .collect()
             ]
-            ro = self.raw["order"].read_partitions(touched)
+            ro = raw.read_partitions(touched)
+        else:
+            # only the rebuild reads the whole raw table: in incremental
+            # mode this root read listed every __month directory (a
+            # Spark listing job per wake-up, O(history))
+            ro = raw.read()
         dc = self.dim_customer.read().select("customer_dim_key", "customer_id")
         di = (
             self.dim_item.read()
@@ -506,14 +518,13 @@ class EntityPipelines:
             fact_month = F.date_format(F.col("order_date"), "yyyy-MM")
             if incremental and self.fact_order.storage.exists():
                 # rewrite only the touched month partitions; changelog
-                # records the rewritten groups (UPSERT granularity)
-                self.fact_order.overwrite_partitions(
-                    out.withColumn("__month", fact_month), changes=out
-                )
+                # records the rewritten groups (UPSERT granularity).
+                # Written once: the changelog version hardlinks the
+                # partition files (__month stays a directory name, so
+                # the change rows are exactly `out`)
+                self.fact_order.overwrite_partitions(out.withColumn("__month", fact_month))
             elif incremental:
-                self.fact_order.overwrite(
-                    out.withColumn("__month", fact_month), changes=out
-                )
+                self.fact_order.overwrite(out.withColumn("__month", fact_month))
             else:
                 # full rebuild: the written table IS this frame — keep a
                 # persisted handle so the post-cycle audit can aggregate

@@ -130,19 +130,13 @@ class ManagedTable:
         A crash in between leaves extra change rows; re-running the step
         is safe because downstream merges are idempotent per key.
 
-        ``changes=None`` + unpartitioned table takes the shared-write
-        path (r16): ``df`` is computed and written once to the temp
-        dir, the changelog version hardlinks those files
-        (Changelog.record_linked — zero copies), then the swap lands.
-        Same crash discipline: the changelog still commits before the
-        table becomes visible.
+        ``changes=None`` takes the write-once path (:meth:`_write_once`).
+        For a partitioned table the changelog then holds the table
+        columns only: the partition columns live in directory names.
         """
-        if changes is None and not self.storage.partition_by:
-            tmp = self.storage.write_tmp(df)
-            version = self.changelog.record_linked(tmp, action)
-            self.storage.swap_tmp(tmp)
-            return version
-        version = self.changelog.record(changes if changes is not None else df, action)
+        if changes is None:
+            return self._write_once(df, action, self.storage.swap_tmp)
+        version = self.changelog.record(changes, action)
         self.storage.overwrite(df)
         return version
 
@@ -153,10 +147,29 @@ class ManagedTable:
         only the partitions present in ``df`` are rewritten; the
         changelog records the applied batch exactly as ``overwrite``
         does, so stream consumers are agnostic to which commit path a
-        producer used. Same ordering/crash discipline as ``overwrite``.
+        producer used. Same ordering/crash discipline as ``overwrite``,
+        and the same write-once path for ``changes=None``.
         """
-        version = self.changelog.record(changes if changes is not None else df, action)
+        if not self.storage.partition_by:
+            raise ValueError("overwrite_partitions requires partition_by")
+        if changes is None:
+            return self._write_once(df, action, self.storage.swap_partitions)
+        version = self.changelog.record(changes, action)
         self.storage.overwrite_partitions(df)
+        return version
+
+    def _write_once(self, df: DataFrame, action: str, swap) -> int:
+        """The shared-write commit (r16): ``df`` is computed and written
+        once to a temp directory (partitioned like the table), the
+        changelog version hardlinks those files
+        (Changelog.record_linked — zero copies), then ``swap`` moves
+        the temp directory (or its partition directories) into the
+        table. The changelog still commits before the table changes,
+        and a re-run after a crash in between rolls the unapplied
+        version back (record_linked) instead of adding a second one."""
+        tmp = self.storage.write_tmp(df)
+        version = self.changelog.record_linked(tmp, action)
+        swap(tmp)
         return version
 
     def truncate(self) -> int:

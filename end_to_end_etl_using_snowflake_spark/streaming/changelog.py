@@ -9,8 +9,10 @@ never reprocessed (T1); change rows carry insert/update/delete actions
 Plain Parquet has no CDF, so each managed table keeps a companion
 append-only changelog directory:
 
-    <table>.__changelog/   parquet: table columns + _action + _version
-    <table>.__meta.json    {"version": N, "offsets": {consumer: V}}
+    <table>.__changelog/   parquet: table columns, partitioned by
+                           _version=N/_action=A directories
+    <table>.__meta.json    {"version": N, "offsets": {consumer: V},
+                            "rows": {V: n}, "schema": <read schema>}
 
 A *stream* is just a named consumer: reading returns rows with
 ``_version > offsets[consumer]``; committing sets the offset. The
@@ -18,9 +20,15 @@ write-table -> commit-offset sequence is crash-safe the same way
 Structured Streaming's is: a re-run re-reads the same batch and the
 downstream MERGE is idempotent for identical input.
 
-Scale: the changelog is partitioned by ``_version`` so offset reads
-prune to new files only; metadata (one small JSON per table) stays on
-the driver — row data never does.
+Scale: every commit stores the version's row count and its read
+schema (the footers' Spark schema plus the two partition columns) in
+the meta, so a stream read opens exactly the ``_version`` directories
+in ``(offset, current]`` under that schema: no schema-inference job,
+and a listing that grows with the unconsumed versions, not with the
+log's history. A producer that just wrote a table's files (partitioned
+or not) commits the version by hardlinking them (:meth:`record_linked`).
+Metadata (one small JSON per table) stays on the driver; row data
+never does.
 """
 
 from __future__ import annotations
@@ -32,11 +40,35 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..plans.tables import parquet_files, parquet_row_count
+from ..operators.dml import empty_frame
+from ..plans.tables import parquet_files
 
 ACTION_COL = "_action"
 VERSION_COL = "_version"
+# the types Spark's partition discovery gives the two directory columns
+PARTITION_FIELDS = [
+    {"name": VERSION_COL, "type": "integer", "nullable": True, "metadata": {}},
+    {"name": ACTION_COL, "type": "string", "nullable": True, "metadata": {}},
+]
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_summary(path: str) -> tuple[int, list | None]:
+    """Row count of the parquet files under ``path`` and the Spark
+    schema fields Spark itself would infer from them (the row schema it
+    stamps into every footer), from footers only. Fields are None when
+    there is no file or the footer carries no Spark schema."""
+    import pyarrow.parquet as pq
+
+    rows, fields = 0, None
+    for f in parquet_files(path):
+        md = pq.read_metadata(f)
+        rows += md.num_rows
+        if fields is None and SPARK_SCHEMA_KEY in (md.metadata or {}):
+            fields = json.loads(md.metadata[SPARK_SCHEMA_KEY])["fields"]
+    return rows, fields
 
 
 class Changelog:
@@ -81,13 +113,12 @@ class Changelog:
         scale: a producer that just wrote the same rows to its table
         can commit the changelog by HARDLINKING the files
         (:meth:`record_linked` — zero bytes copied, no second job),
-        and the per-version row count is readable from the parquet
-        footers (O(files) driver metadata), which
-        :meth:`stream_has_data` uses to answer without a Spark job.
-        Readers are unchanged: partition discovery appends both
-        columns, and every consumer selects by name."""
-        meta = self._read_meta()
-        new_version = meta["version"] + 1
+        and the per-version row count and read schema come from the
+        parquet footers (O(files) driver metadata), which
+        :meth:`stream_has_data` and :meth:`stream_read` use to answer
+        without a Spark job. Readers see both directory columns
+        appended, and every consumer selects by name."""
+        meta, new_version, stale = self._next_version()
         (
             df.withColumn(ACTION_COL, F.lit(action))
             .withColumn(VERSION_COL, F.lit(new_version))
@@ -95,13 +126,7 @@ class Changelog:
             .partitionBy(VERSION_COL, ACTION_COL)
             .parquet(self.log_path)
         )
-        meta["version"] = new_version
-        meta.setdefault("rows", {})[str(new_version)] = parquet_row_count(
-            os.path.join(self.log_path, f"{VERSION_COL}={new_version}")
-        )
-        if at is not None:
-            meta.setdefault("times", {})[str(new_version)] = at
-        self._write_meta(meta)
+        self._commit(meta, new_version, at, stale)
         return new_version
 
     def record_linked(
@@ -113,30 +138,81 @@ class Changelog:
         the zero-copy half of the r16 layout. Equivalent to
         ``record(df, action)`` for a ``df`` with the same rows: the
         files' columns are the table columns, and ``_version`` /
-        ``_action`` live in the directory names. O(files) metadata
-        work, zero bytes copied, shared write-once inodes (same trick
-        as CLONE TABLE)."""
-        meta = self._read_meta()
-        new_version = meta["version"] + 1
+        ``_action`` live in the directory names. ``src_dir`` may be
+        partitioned (``key=value/part-*``): the partition column lives
+        in the directory name, not in the files, so it does not enter
+        the changelog. Each link is named from the file's path relative
+        to ``src_dir``, so equal part names in different partition
+        directories stay distinct. O(files) metadata work, zero bytes
+        copied, shared write-once inodes (same trick as CLONE TABLE).
+
+        The producer must consume ``src_dir`` (rename it away) once the
+        version is applied to its table. A version whose ``src_dir``
+        still exists at the next commit was never applied (a crash
+        between this commit and the producer's swap); that commit
+        rolls it back, unless a consumer already read it (then its rows
+        stay as extra change rows), so the re-run of the step commits
+        the same version number and rows as a crash-free run would."""
+        meta, new_version, stale = self._next_version()
         dst = os.path.join(
             self.log_path,
             f"{VERSION_COL}={new_version}",
             f"{ACTION_COL}={action}",
         )
-        os.makedirs(dst, exist_ok=True)
+        os.makedirs(dst)
         for src in parquet_files(src_dir):
-            f = os.path.basename(src)
-            target = os.path.join(dst, f)
-            if os.path.exists(target):  # paranoid: part names are unique
-                target = os.path.join(dst, f"v{new_version}-{f}")
-            os.link(src, target)
-        rows = parquet_row_count(dst)
-        meta["version"] = new_version
-        meta.setdefault("rows", {})[str(new_version)] = rows
-        if at is not None:
-            meta.setdefault("times", {})[str(new_version)] = at
-        self._write_meta(meta)
+            # the partition path flattened into a name Spark does not
+            # skip (it ignores ``_``/``.`` names): ``__month=2024-01/
+            # part-0.parquet`` -> ``month=2024-01-part-0.parquet``
+            name = os.path.relpath(src, src_dir).replace(os.sep, "-").lstrip("_.")
+            os.link(src, os.path.join(dst, name))
+        meta["linked"] = {"version": new_version, "src": src_dir}
+        self._commit(meta, new_version, at, stale)
         return new_version
+
+    def _next_version(self) -> tuple[dict, int, str | None]:
+        """The meta and the version number the next commit takes.
+
+        First rolls back an unapplied linked version (see
+        :meth:`record_linked`), then clears any directory already
+        present under the new number: the meta does not list it, so it
+        is debris of a commit that crashed before its meta write, and
+        appending to it would double its rows. Also returns the
+        unapplied version's source directory, which the caller removes
+        after its own meta write lands."""
+        meta = self._read_meta()
+        linked = meta.pop("linked", None)
+        stale = None
+        if linked is not None and os.path.isdir(linked["src"]):
+            stale = linked["src"]
+        if (
+            stale is not None
+            and linked["version"] == meta["version"]
+            and all(o < meta["version"] for o in meta["offsets"].values())
+        ):
+            meta["rows"].pop(str(meta["version"]), None)
+            meta.get("times", {}).pop(str(meta["version"]), None)
+            meta["version"] -= 1
+        new_version = meta["version"] + 1
+        shutil.rmtree(
+            os.path.join(self.log_path, f"{VERSION_COL}={new_version}"),
+            ignore_errors=True,
+        )
+        return meta, new_version, stale
+
+    def _commit(self, meta: dict, version: int, at: str | None, stale: str | None) -> None:
+        rows, fields = _footer_summary(
+            os.path.join(self.log_path, f"{VERSION_COL}={version}")
+        )
+        meta["version"] = version
+        meta.setdefault("rows", {})[str(version)] = rows
+        if fields is not None:
+            meta["schema"] = {"type": "struct", "fields": fields + PARTITION_FIELDS}
+        if at is not None:
+            meta.setdefault("times", {})[str(version)] = at
+        self._write_meta(meta)
+        if stale is not None:
+            shutil.rmtree(stale, ignore_errors=True)
 
     def version_at(self, ts: str) -> int:
         """Greatest version whose recorded commit time is <= ``ts``
@@ -164,26 +240,45 @@ class Changelog:
 
     def bump(self) -> int:
         """Version bump with no rows (e.g. TRUNCATE)."""
-        meta = self._read_meta()
-        meta["version"] += 1
-        meta.setdefault("rows", {})[str(meta["version"])] = 0
-        self._write_meta(meta)
-        return meta["version"]
+        meta, new_version, stale = self._next_version()
+        self._commit(meta, new_version, None, stale)
+        return new_version
 
     # -- consumer side (the "stream") --------------------------------------
     def stream_read(self, consumer: str) -> tuple[DataFrame, int]:
         """Unconsumed change rows + the version to commit after applying.
 
-        Partition pruning on _version keeps this proportional to the new
-        data, not the table's history.
-        """
+        Opens only the ``_version`` directories in ``(offset, current]``
+        (``basePath`` keeps both directory columns) under the schema the
+        commits recorded: no Spark job, and the listing is proportional
+        to the unconsumed versions, not the log's history. A directory
+        above ``current`` (an uncommitted write) is never read. Returns
+        an empty frame when no unconsumed version has files, and None
+        when nothing was ever committed with a schema and there is
+        nothing to read. A log whose meta predates recorded schemas
+        falls back to inferring one from the selected directories."""
         meta = self._read_meta()
         current = meta["version"]
         offset = meta["offsets"].get(consumer, 0)
-        if not os.path.exists(self.log_path):
-            return None, current
-        df = self.spark.read.parquet(self.log_path).filter(F.col(VERSION_COL) > offset)
-        return df, current
+        dirs = [
+            d
+            for v in range(offset + 1, current + 1)
+            if os.path.isdir(d := os.path.join(self.log_path, f"{VERSION_COL}={v}"))
+        ]
+        schema = self.schema(meta)
+        if not dirs:
+            return (None if schema is None else empty_frame(self.spark, schema)), current
+        reader = self.spark.read.option("basePath", self.log_path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*dirs), current
+
+    def schema(self, meta: dict | None = None) -> T.StructType | None:
+        """The read schema of the log (table columns + ``_version`` +
+        ``_action``) as the latest commit with files recorded it; None
+        when no commit recorded one."""
+        meta = self._read_meta() if meta is None else meta
+        return T.StructType.fromJson(meta["schema"]) if "schema" in meta else None
 
     def stream_has_data(self, consumer: str) -> bool:
         """system$stream_has_data analog (customer-...sql:66): cheap
@@ -398,7 +493,10 @@ def append_only_stream_read(
     offset = meta["offsets"].get(consumer, 0)
     if not os.path.exists(changelog.log_path):
         return None, current
-    all_changes = changelog.spark.read.parquet(changelog.log_path)
+    reader = changelog.spark.read
+    if (schema := changelog.schema(meta)) is not None:
+        reader = reader.schema(schema)
+    all_changes = reader.parquet(changelog.log_path)
     w = Window.partitionBy(*keys).orderBy(F.col(VERSION_COL))
     hist = all_changes.withColumn("__prev_action", F.lag(ACTION_COL).over(w))
     return (
