@@ -203,10 +203,10 @@ class ParquetTable:
 
     def swap_partitions(self, tmp: str) -> None:
         """The commit half of a dynamic partition overwrite: move each
-        partition directory of ``tmp`` (a partitioned ``write_tmp``
-        output) into the table, replacing the directory of the same
-        ``key=value`` path. Partitions absent from ``tmp`` are
-        untouched. Per partition this is the discipline of Spark's
+        partition directory of ``tmp`` (a ``write_tmp`` output of a
+        table with one partition column) into the table, replacing
+        the directory of the same ``key=value`` path. Partitions absent
+        from ``tmp`` are untouched. Per partition this is the discipline of Spark's
         dynamic-overwrite commit (old directory out, new directory in;
         the set of partitions is not swapped atomically), without
         Spark's copy out of a staging directory. The displaced
@@ -214,24 +214,16 @@ class ParquetTable:
         no reader lists them. ``tmp`` is removed last, and a failure to
         remove it raises: its presence is what tells the changelog the
         swap did not finish (``Changelog.record_linked``)."""
-        if not self.partition_by:
-            raise ValueError("swap_partitions requires partition_by")
-        rels = [""]
-        for _ in self.partition_by:
-            rels = [
-                os.path.join(rel, d)
-                for rel in rels
-                for d in sorted(os.listdir(os.path.join(tmp, rel)))
-                if "=" in d and os.path.isdir(os.path.join(tmp, rel, d))
-            ]
+        (pcol,) = self.partition_by
+        parts = sorted(d for d in os.listdir(tmp) if d.startswith(f"{pcol}="))
         old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        for rel in rels:
-            dst = os.path.join(self.path, rel)
+        os.makedirs(old)
+        os.makedirs(self.path, exist_ok=True)
+        for part in parts:
+            dst = os.path.join(self.path, part)
             if os.path.exists(dst):
-                os.makedirs(os.path.dirname(os.path.join(old, rel)), exist_ok=True)
-                os.rename(dst, os.path.join(old, rel))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(os.path.join(tmp, rel), dst)
+                os.rename(dst, os.path.join(old, part))
+            os.rename(os.path.join(tmp, part), dst)
         shutil.rmtree(tmp)
         shutil.rmtree(old, ignore_errors=True)
 

@@ -10,6 +10,7 @@ partitioned/bucketed external tables, but the call sites are identical.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,18 +76,41 @@ def parquet_files(path: str) -> list[str]:
     return out
 
 
-def parquet_row_count(path: str) -> int:
-    """Exact row count of the parquet file or table directory at
-    ``path`` from its FOOTERS — O(files) driver-side metadata, no
-    Spark job (the Snowflake COUNT(*)-from-micro-partition-metadata
-    semantic). Equal to ``spark.read.parquet(path).count()``.
+# the key under which Spark stamps a file's row schema into its footer
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-    Feeds the adaptive-LSH geometry derivation (d5l/d14/v16), the
-    stream_has_data metadata gate and the audit's side counts.
-    """
+
+def parquet_footer_summary(path: str) -> tuple[int, list | None]:
+    """Row count of the parquet file or table directory at ``path``
+    and the Spark schema fields of its first footer that carries one
+    (the row schema Spark stamps into every file it writes), from the
+    FOOTERS only: O(files) driver-side metadata, no Spark job. The
+    fields are None when there is no file or no footer carries a
+    Spark schema.
+
+    Feeds the changelog's per-version row counts and read schema
+    (the stream_has_data gate and stream_read)."""
     import pyarrow.parquet as pq
 
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(path))
+    rows, fields = 0, None
+    for f in parquet_files(path):
+        md = pq.read_metadata(f)
+        rows += md.num_rows
+        if fields is None and SPARK_SCHEMA_KEY in (md.metadata or {}):
+            fields = json.loads(md.metadata[SPARK_SCHEMA_KEY])["fields"]
+    return rows, fields
+
+
+def parquet_row_count(path: str) -> int:
+    """Exact row count of the parquet file or table directory at
+    ``path`` from its footers (:func:`parquet_footer_summary`) — the
+    Snowflake COUNT(*)-from-micro-partition-metadata semantic. Equal
+    to ``spark.read.parquet(path).count()``.
+
+    Feeds the adaptive-LSH geometry derivation (d5l/d14/v16) and the
+    audit's side counts.
+    """
+    return parquet_footer_summary(path)[0]
 
 
 def is_undersplit(df: DataFrame) -> bool:

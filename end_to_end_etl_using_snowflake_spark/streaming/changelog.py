@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dml import empty_frame
-from ..plans.tables import parquet_files
+from ..plans.tables import parquet_files, parquet_footer_summary
 
 ACTION_COL = "_action"
 VERSION_COL = "_version"
@@ -52,23 +52,6 @@ PARTITION_FIELDS = [
     {"name": VERSION_COL, "type": "integer", "nullable": True, "metadata": {}},
     {"name": ACTION_COL, "type": "string", "nullable": True, "metadata": {}},
 ]
-SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_summary(path: str) -> tuple[int, list | None]:
-    """Row count of the parquet files under ``path`` and the Spark
-    schema fields Spark itself would infer from them (the row schema it
-    stamps into every footer), from footers only. Fields are None when
-    there is no file or the footer carries no Spark schema."""
-    import pyarrow.parquet as pq
-
-    rows, fields = 0, None
-    for f in parquet_files(path):
-        md = pq.read_metadata(f)
-        rows += md.num_rows
-        if fields is None and SPARK_SCHEMA_KEY in (md.metadata or {}):
-            fields = json.loads(md.metadata[SPARK_SCHEMA_KEY])["fields"]
-    return rows, fields
 
 
 class Changelog:
@@ -201,7 +184,7 @@ class Changelog:
         return meta, new_version, stale
 
     def _commit(self, meta: dict, version: int, at: str | None, stale: str | None) -> None:
-        rows, fields = _footer_summary(
+        rows, fields = parquet_footer_summary(
             os.path.join(self.log_path, f"{VERSION_COL}={version}")
         )
         meta["version"] = version
@@ -250,28 +233,33 @@ class Changelog:
 
         Opens only the ``_version`` directories in ``(offset, current]``
         (``basePath`` keeps both directory columns) under the schema the
-        commits recorded: no Spark job, and the listing is proportional
-        to the unconsumed versions, not the log's history. A directory
-        above ``current`` (an uncommitted write) is never read. Returns
-        an empty frame when no unconsumed version has files, and None
-        when nothing was ever committed with a schema and there is
-        nothing to read. A log whose meta predates recorded schemas
-        falls back to inferring one from the selected directories."""
+        commits recorded, so the listing is proportional to the
+        unconsumed versions, not the log's history. While those number
+        at most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        (32 by default) the driver lists them itself and the read runs
+        no Spark job; a consumer further behind gets one listing job. A
+        directory above ``current`` (an uncommitted write) is never
+        read. Returns an empty frame when no unconsumed version has
+        files, and None when no commit has written files yet."""
         meta = self._read_meta()
         current = meta["version"]
+        schema = self.schema(meta)
+        if schema is None:
+            return None, current
         offset = meta["offsets"].get(consumer, 0)
         dirs = [
             d
             for v in range(offset + 1, current + 1)
             if os.path.isdir(d := os.path.join(self.log_path, f"{VERSION_COL}={v}"))
         ]
-        schema = self.schema(meta)
         if not dirs:
-            return (None if schema is None else empty_frame(self.spark, schema)), current
-        reader = self.spark.read.option("basePath", self.log_path)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*dirs), current
+            return empty_frame(self.spark, schema), current
+        return (
+            self.spark.read.option("basePath", self.log_path)
+            .schema(schema)
+            .parquet(*dirs),
+            current,
+        )
 
     def schema(self, meta: dict | None = None) -> T.StructType | None:
         """The read schema of the log (table columns + ``_version`` +
@@ -491,12 +479,10 @@ def append_only_stream_read(
     meta = changelog._read_meta()
     current = meta["version"]
     offset = meta["offsets"].get(consumer, 0)
-    if not os.path.exists(changelog.log_path):
+    schema = changelog.schema(meta)
+    if schema is None:
         return None, current
-    reader = changelog.spark.read
-    if (schema := changelog.schema(meta)) is not None:
-        reader = reader.schema(schema)
-    all_changes = reader.parquet(changelog.log_path)
+    all_changes = changelog.spark.read.schema(schema).parquet(changelog.log_path)
     w = Window.partitionBy(*keys).orderBy(F.col(VERSION_COL))
     hist = all_changes.withColumn("__prev_action", F.lag(ACTION_COL).over(w))
     return (

@@ -238,6 +238,7 @@ def test_fact_changelog_version_is_the_rewritten_partitions(spark, runs, batches
 
 def test_stream_read_runs_no_job_and_reads_only_unconsumed_versions(spark, tmp_path):
     log = Changelog(spark, str(tmp_path / "t"))
+    assert log.stream_read("c") == (None, 0)  # nothing committed yet
     schema = "k int, s string"
     for i in range(3):
         log.record(spark.createDataFrame([(i, f"v{i + 1}")], schema), "INSERT")

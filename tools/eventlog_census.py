@@ -21,13 +21,11 @@ It also flags the jobs that produce no rows of their own:
 
 Usage:
 
-    python tools/eventlog_census.py <event-log-file> [--by description|group]
-        [--group PREFIX] [--flagged]
+    python tools/eventlog_census.py <event-log-file> [--group PREFIX] [--flagged]
 
-``--by group`` groups by ``spark.jobGroup.id`` instead (the perfbench
-tracer sets one per layer path, e.g. ``perfbench:wake/...`` for the
-weekly wake-ups). ``--group PREFIX`` keeps only the jobs whose group
-starts with PREFIX. ``--flagged`` also lists every flagged job with
+``--group PREFIX`` keeps only the jobs whose ``spark.jobGroup.id``
+starts with PREFIX (the perfbench tracer sets one per layer path, e.g.
+``perfbench:wake/...`` for the weekly wake-ups). ``--flagged`` also lists every flagged job with
 its group and stage name. Tasks are attributed to the first job
 that lists their stage. Standard library only; the log is only read.
 """
@@ -80,13 +78,14 @@ def load_jobs(path: str) -> dict[int, dict]:
     return jobs
 
 
-def census(jobs: dict[int, dict], by: str = "label") -> dict[str, dict]:
-    """Key -> {jobs, tasks, duration_s, no_sql, listing}."""
+def census(jobs: dict[int, dict]) -> dict[str, dict]:
+    """Description -> {jobs, tasks, duration_s, no_sql, listing}; the
+    listing jobs share one row."""
     out: dict[str, dict] = defaultdict(
         lambda: {"jobs": 0, "tasks": 0, "duration_s": 0.0, "no_sql": 0, "listing": 0}
     )
     for job in jobs.values():
-        row = out[LISTING_PREFIX if job["listing"] else job[by]]
+        row = out[LISTING_PREFIX if job["listing"] else job["label"]]
         row["jobs"] += 1
         row["tasks"] += job["tasks"]
         row["duration_s"] += (job["end"] - job["start"]) / 1000.0
@@ -98,15 +97,14 @@ def census(jobs: dict[int, dict], by: str = "label") -> dict[str, dict]:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log", help="uncompressed, non-rolling Spark event log file")
-    ap.add_argument("--by", choices=("description", "group"), default="description")
     ap.add_argument("--group", default="", help="keep jobs whose group starts with this")
     ap.add_argument("--flagged", action="store_true", help="list each flagged job")
     args = ap.parse_args(argv)
 
     jobs = {k: j for k, j in load_jobs(args.log).items() if j["group"].startswith(args.group)}
-    rows = census(jobs, "label" if args.by == "description" else "group")
-    width = max([len(k) for k in rows] + [len(args.by)])
-    print(f"{args.by:<{width}}  {'jobs':>5} {'tasks':>6} {'dur_s':>8} {'no_sql':>6} {'listing':>7}")
+    rows = census(jobs)
+    width = max([len(k) for k in rows] + [len("description")])
+    print(f"{'description':<{width}}  {'jobs':>5} {'tasks':>6} {'dur_s':>8} {'no_sql':>6} {'listing':>7}")
     for key, r in sorted(rows.items(), key=lambda kv: (-kv[1]["jobs"], kv[0])):
         print(
             f"{key:<{width}}  {r['jobs']:>5} {r['tasks']:>6} {r['duration_s']:>8.2f}"
